@@ -31,10 +31,9 @@ from __future__ import annotations
 import bisect
 import hashlib
 import itertools
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, List, Optional
 
 from inclusionreferenceskg_spark.functions.annotate_spacy import get_annotator
-from inclusionreferenceskg_spark.functions.doctree import DEPTH
 from inclusionreferenceskg_spark.functions.phrases import (
     Phrase,
     PhraseExtractor,
@@ -42,20 +41,6 @@ from inclusionreferenceskg_spark.functions.phrases import (
 from inclusionreferenceskg_spark.functions.tokens import Tok
 
 _PREP_DEPS = {"prep", "acomp"}
-
-
-def paragraph_key(url: str, path: Sequence[Dict]) -> Optional[str]:
-    """Serialized identity of the enclosing Paragraph (L2 blocking key,
-    same_lemma_in_same_paragraph_linker.py:27-40); None above Paragraph
-    depth."""
-    if not path or DEPTH[path[-1]["node_type"]] < DEPTH["Paragraph"]:
-        return None
-    prefix = []
-    for el in path:
-        prefix.append(f"{el['node_type']}:{el['number']}")
-        if DEPTH[el["node_type"]] >= DEPTH["Paragraph"]:
-            break
-    return url + "|" + "/".join(prefix)
 
 
 def _coref_base(tok: Tok) -> Tok:

@@ -25,7 +25,7 @@ exploded qualifiers against the nodes table on the deepest pattern element's
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import Dict, List
 
 from inclusionreferenceskg_spark.functions.doctree import DEPTH
 
@@ -69,9 +69,3 @@ def path_matches(path: List[Dict], pattern: List[Dict],
                 return False
         p += advance
     return False
-
-
-def deepest_element(pattern: List[Dict]) -> Optional[Dict]:
-    """The deepest (most specific) element of a depth-sorted pattern — the
-    equi-join key for candidate generation."""
-    return pattern[-1] if pattern else None

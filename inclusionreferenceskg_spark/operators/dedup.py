@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from inclusionreferenceskg_spark.operators.kg import pair_components
 from inclusionreferenceskg_spark.operators.textstats import hash64, norm_text
 
 SHINGLE_K = 3
@@ -287,100 +288,25 @@ def ngram_jaccard_pairs(documents: DataFrame,
             .select("a", "b", "jaccard"))
 
 
-def neardup_clusters(documents: DataFrame, threshold: float = 0.5,
-                     max_iter: int = 16,
-                     driver_cutoff: int = 200_000) -> DataFrame:
+def neardup_clusters(documents: DataFrame,
+                     threshold: float = 0.5) -> DataFrame:
     """Near-duplicate *clusters*: connected components over the
     jaccard-verified LSH pair graph -> one row per clustered document
     ``(doc_id, canon_id, cluster_size)``, canonical = min doc_id of the
     component (deterministic; mirrors the canonical-min policy of the KG
     entity canonicalization, knowledge_graph.py:193-217).
 
-    Scale shape: the pair graph is O(near-duplicates) — orders of
+    The components come from the KG's engine, ``kg.pair_components``
+    (driver union-find while the pair list fits under ``DRIVER_CUTOFF``,
+    else distributed pointer doubling); this operator adds only the
+    cluster size.  The pair graph is O(near-duplicates) — orders of
     magnitude smaller than the corpus, since LSH banding + the
-    ``max_bucket`` boilerplate cap bound candidate generation.  Two paths,
-    same policy as ``kg.connected_components``:
-
-    * whole-graph driver union-find below an explicit ``driver_cutoff``
-      (one collect of the *pair list*, never the corpus);
-    * otherwise distributed min-label propagation with pointer doubling
-      (label(n) <- min(label(n), labels of neighbors, label(label(n)))),
-      converging in O(log diameter) small shuffles on the pair graph,
-      with per-round lineage truncation.
+    ``max_bucket`` boilerplate cap bound candidate generation.
     """
-    return pair_components(
-        ngram_jaccard_pairs(documents, threshold).select("a", "b"),
-        max_iter=max_iter, driver_cutoff=driver_cutoff)
-
-
-def pair_components(pairs: DataFrame, max_iter: int = 16,
-                    driver_cutoff: int = 200_000) -> DataFrame:
-    """Connected components over an undirected pair graph (columns
-    ``a``, ``b``; isolated nodes absent by construction):
-    ``(doc_id, canon_id, cluster_size)``, canonical = component min id.
-    The shared engine behind ``neardup_clusters`` and ``graph.wcc`` —
-    driver union-find under ``driver_cutoff`` pairs, else distributed
-    min-label propagation with pointer doubling (see the callers'
-    docstrings for the policy discussion)."""
-    spark = pairs.sparkSession
-    pairs = pairs.select("a", "b").localCheckpoint(eager=True)
-
-    def sized(labels: DataFrame) -> DataFrame:
-        w = Window.partitionBy("canon_id")
-        return (labels.withColumn(
-            "cluster_size", F.count("*").over(w).cast("bigint")))
-
-    if pairs.count() <= driver_cutoff:
-        parent: dict = {}
-
-        def find(x):
-            while parent.get(x, x) != x:
-                parent[x] = parent.get(parent[x], parent[x])
-                x = parent[x]
-            return x
-
-        for r in pairs.collect():
-            ra, rb = find(r.a), find(r.b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = [(k, find(k)) for k in
-                {x for r in pairs.collect() for x in (r.a, r.b)}]
-        labels = spark.createDataFrame(
-            rows or [(0, 0)], "doc_id bigint, canon_id bigint")
-        if not rows:
-            labels = labels.filter(F.lit(False))
-        return sized(labels)
-
-    rev = pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    edges = (pairs.unionByName(rev)
-             .repartition(32, "a").localCheckpoint(eager=True))
-    labels = (edges.groupBy("a")
-              .agg(F.least(F.col("a"), F.min("b")).alias("lbl"))
-              .withColumnRenamed("a", "n")
-              .localCheckpoint(eager=True))
-    for _ in range(max_iter):
-        nbr = (edges
-               .join(labels.select(F.col("n").alias("b"),
-                                   F.col("lbl").alias("lbl_b")), "b")
-               .groupBy("a").agg(F.min("lbl_b").alias("nlbl"))
-               .withColumnRenamed("a", "n"))
-        cand = (labels.join(nbr, "n", "left")
-                .select("n", F.least(
-                    F.col("lbl"),
-                    F.coalesce("nlbl", "lbl")).alias("lbl")))
-        hop = cand.select(F.col("n").alias("m"), F.col("lbl").alias("lbl2"))
-        dbl = (cand.join(hop, cand.lbl == hop.m, "left")
-               .select(cand.n, F.least(
-                   cand.lbl, F.coalesce(hop.lbl2, cand.lbl)).alias("lbl"))
-               .localCheckpoint(eager=True))
-        changed = (dbl.join(labels.withColumnRenamed("lbl", "old"), "n")
-                   .filter(F.col("lbl") != F.col("old")).count())
-        labels = dbl
-        if changed == 0:
-            break
-    return sized(labels.select(F.col("n").alias("doc_id"),
-                               F.col("lbl").alias("canon_id")))
+    cc = pair_components(ngram_jaccard_pairs(documents, threshold))
+    return cc.select(F.col("id").alias("doc_id"), "canon_id",
+                     F.count("*").over(Window.partitionBy("canon_id"))
+                     .alias("cluster_size"))
 
 
 def neardup_keep_best(documents: DataFrame,

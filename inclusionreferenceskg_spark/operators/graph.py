@@ -28,8 +28,8 @@ Scale notes per operator (local[32] today, 1000-executor target):
   a distinct + an anti-join against visited.  Shuffles are keyed on
   node id; at web scale the per-hop frontier should be persisted and
   the lineage checkpoint-truncated every few hops (same policy as the
-  CC min-label loop in ``kg.py``); with a fixed small k the unrolled
-  plan is fine and AQE sizes the per-hop exchanges.
+  CC min-label loop, ``kg.pair_components``); with a fixed small k the
+  unrolled plan is fine and AQE sizes the per-hop exchanges.
 * ``pagerank`` — the rank vector is INTEGER-scaled (rank mass of
   10^12 split by integer division) so per-node sums are
   order-independent: float PageRank would diverge between engines by
@@ -46,8 +46,9 @@ Scale notes per operator (local[32] today, 1000-executor target):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
+from .kg import pair_components
 from .textstats import hash64
 
 #: number of out-links each document emits
@@ -173,7 +174,7 @@ def sssp(seeds: DataFrame, edges_w: DataFrame, max_hops: int) -> DataFrame:
     at sf0.01/local[8].  The delta optimization pays in a
     run-to-convergence loop (large effective k, shrinking frontier) —
     there, add it together with eager per-round materialization and
-    lineage truncation (the ``pair_components`` policy), or the savings
+    lineage truncation (the ``kg.pair_components`` policy), or the savings
     drown in plan-growth overhead exactly as measured here.
     """
     dist = seeds.select("node", F.lit(0).cast("long").alias("dist"))
@@ -302,17 +303,17 @@ def wcc(edges: DataFrame) -> DataFrame:
     (node, component, component_size), direction ignored, component id =
     min node id.  Labels only nodes with at least one edge (isolated
     pages are their own trivial component and are omitted, matching the
-    pair-graph contract).  Reuses the dedup pair-components engine:
-    driver union-find while the EDGE list (not the corpus) fits under an
-    explicit cutoff, else distributed min-label propagation with pointer
-    doubling and per-round lineage truncation — O(log diameter) shuffles
-    on the edge list."""
-    from .dedup import pair_components
-    out = pair_components(
+    pair-graph contract).  The components come from the KG's engine,
+    ``kg.pair_components``: driver union-find while the EDGE list (not
+    the corpus) fits under ``DRIVER_CUTOFF``, else distributed pointer
+    doubling with per-round lineage truncation; this operator adds only
+    the component size."""
+    cc = pair_components(
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b")))
-    return out.select(F.col("doc_id").alias("node"),
-                      F.col("canon_id").alias("component"),
-                      F.col("cluster_size").alias("component_size"))
+    return cc.select(F.col("id").alias("node"),
+                     F.col("canon_id").alias("component"),
+                     F.count("*").over(Window.partitionBy("canon_id"))
+                     .alias("component_size"))
 
 
 def label_propagation(documents: DataFrame, edges: DataFrame,

@@ -7,16 +7,24 @@ Dataflow (SURVEY §3.1):
         kg_nodes / kg_edges / L3-candidates        (one pass, wide rows)
     kg_nodes ──groupBy blocking keys (L1/L2/L4)──► merge pairs
     L3-candidates ⋈ nodes(path-prefix) ⋈ kg_nodes ─► merge pairs
-    merge pairs ──iterative min-label CC──► canonical map
+    merge pairs ──connected components (pair_components)──► canonical map
     kg_edges ⋈ canonical map ──rewrite+dedup──► final graph
     final graph ⋈ display strings ──► (subject, relation, object) triples
 
 Scale: the extraction pass is narrow; L1/L2/L4 are single shuffles on their
 blocking keys (Zipfian lemma keys ride on AQE skew handling; key spaces are
 already salted by construction because every key embeds its paragraph/node
-identity); the CC loop converges in a handful of iterations because merge
-components are within-document by construction (L1–L3) or per-surface-form
-(L4), with ``localCheckpoint`` cutting lineage each round.
+identity).
+
+Connected components: this module holds the package's one CC engine,
+``pair_components`` — one union-find (``_union_find``), used on the driver
+while the pair list fits under ``DRIVER_CUTOFF`` and inside the
+per-document contraction kernel, and one distributed loop (min-label
+pointer doubling until no label changes).  ``connected_components`` adds
+the KG-specific parts: the pair checkpoint, the broadcast hint, and the
+per-document contraction whose cross-document quotient the engine
+labels.  ``dedup.neardup_clusters`` and ``graph.wcc`` call the engine
+directly.
 """
 
 from __future__ import annotations
@@ -357,73 +365,145 @@ def entity_link_pairs(kg_nodes: DataFrame, l3: DataFrame,
     return out.distinct() if dedup else out
 
 
-def _partition_union_find(batches):
+#: Pair lists of at most this many rows are labelled on the driver (one
+#: fetch + union-find); larger ones take the distributed loop.
+DRIVER_CUTOFF = 200_000
+
+
+def _union_find(pairs: Iterable) -> dict:
+    """``{id: min id of its component}`` for every id in ``pairs``."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _driver_labels(pairs: DataFrame):
+    """Driver fast path: ``(id, canon_id)`` blocks, or None when the pair
+    list exceeds ``DRIVER_CUTOFF``.
+
+    The cutoff probe and the fetch are FUSED: limit(cutoff+1) + Arrow
+    toPandas is one early-terminating job (a full count + row-pickled
+    collect would be two jobs and build every Row object on the driver);
+    past the cutoff the fetch is discarded, having paid one bounded scan.
+    The labels go back through the Arrow createDataFrame path, typed like
+    the input's ``a`` column (string kg ids, bigint doc ids), and are
+    pinned as JVM blocks so every downstream reference scans blocks
+    instead of re-shipping the python rows."""
+    _jobdesc("cc: driver fast-path probe+fetch")
+    probe = pairs.select("a", "b").limit(DRIVER_CUTOFF + 1).toPandas()
+    if len(probe) > DRIVER_CUTOFF:
+        return None
+    labels = _union_find(zip(probe["a"].tolist(), probe["b"].tolist()))
+    id_type = dict(pairs.dtypes)["a"]
+    out = pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"id": list(labels), "canon_id": list(labels.values())},
+                     dtype=object),
+        f"id {id_type}, canon_id {id_type}")
+    if not labels:  # folds to an empty relation: publishing runs no job
+        out = out.filter(F.lit(False))
+    _jobdesc("cc: driver labels publish")
+    return out.localCheckpoint(eager=True)
+
+
+def _min_label_loop(pairs: DataFrame) -> DataFrame:
+    """Distributed min-label propagation with pointer doubling:
+    label(n) <- min(label(n), labels of n's neighbours, label(label(n))),
+    each round cut from its lineage, until no label changes.  A label only
+    ever falls and always names a member of its component, so the loop
+    ends, and at its fixed point neighbours agree and the component min
+    labels itself.  The doubling hop lets a label jump along chains that
+    are already labelled instead of walking them one edge per round."""
+    sym = F.explode(F.array(F.array("a", "b"), F.array("b", "a")))
+    edges = (pairs.select(sym.alias("e"))
+             .select(F.col("e")[0].alias("a"), F.col("e")[1].alias("b"))
+             .repartition(32, "a").localCheckpoint(eager=True))
+    labels = (edges.groupBy("a")
+              .agg(F.least(F.col("a"), F.min("b")).alias("lbl"))
+              .withColumnRenamed("a", "n")
+              .localCheckpoint(eager=True))
+    while True:
+        _jobdesc("cc: min-label round")
+        nbr = (edges
+               .join(labels.select(F.col("n").alias("b"),
+                                   F.col("lbl").alias("lbl_b")), "b")
+               .groupBy("a").agg(F.min("lbl_b").alias("nlbl"))
+               .withColumnRenamed("a", "n"))
+        cand = (labels.join(nbr, "n", "left")
+                .select("n", F.least(
+                    F.col("lbl"),
+                    F.coalesce("nlbl", "lbl")).alias("lbl")))
+        hop = cand.select(F.col("n").alias("m"), F.col("lbl").alias("lbl2"))
+        dbl = (cand.join(hop, cand.lbl == hop.m, "left")
+               .select(cand.n, F.least(
+                   cand.lbl, F.coalesce(hop.lbl2, cand.lbl)).alias("lbl"))
+               .localCheckpoint(eager=True))
+        changed = (dbl.join(labels.withColumnRenamed("lbl", "old"), "n")
+                   .filter(F.col("lbl") != F.col("old")).count())
+        labels = dbl
+        if changed == 0:
+            return labels.select(F.col("n").alias("id"),
+                                 F.col("lbl").alias("canon_id"))
+
+
+def pair_components(pairs: DataFrame) -> DataFrame:
+    """The one connected-components engine: an undirected pair graph
+    (columns ``a``, ``b``) -> ``(id, canon_id)`` for every id in a pair,
+    canonical = min id of its component (isolated ids are absent, i.e.
+    map to themselves).  Driver union-find while the pair list fits under
+    ``DRIVER_CUTOFF``, else the distributed pointer-doubling loop.  Used
+    by ``connected_components`` (on its cross-document quotient),
+    ``dedup.neardup_clusters`` and ``graph.wcc``."""
+    labels = _driver_labels(pairs)
+    return _min_label_loop(pairs) if labels is None else labels
+
+
+def _local_contraction(batches):
     """mapInPandas kernel: union-find over all pairs in the partition,
     emitting (kg_id, root=min id of its component) for non-root members.
     Pairs are colocated by document-id prefix, so every same-document
     component is complete within one partition; unrelated documents
     sharing a partition cannot interact (disjoint id spaces)."""
-    import pandas as pd
-
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for pdf in batches:
-        for a, b in zip(pdf["a"], pdf["b"]):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-    out_id, out_root = [], []
-    for x in parent:
-        r = find(x)
-        if r != x:
-            out_id.append(x)
-            out_root.append(r)
-    yield pd.DataFrame({"kg_id": out_id, "root": out_root})
+    labels = _union_find(
+        pair for pdf in batches
+        for pair in zip(pdf["a"].tolist(), pdf["b"].tolist()))
+    members = {x: r for x, r in labels.items() if x != r}
+    yield pd.DataFrame({"kg_id": list(members),
+                        "root": list(members.values())}, dtype=object)
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 12,
-                         small_quotient_cutoff: int = 200_000) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Merge-pair graph -> (kg_id, canon_id), canonical = min id per
     component (the deterministic replacement for the reference's
-    ``set.pop()`` winner, knowledge_graph.py:193-217).
+    ``set.pop()`` winner, knowledge_graph.py:193-217).  Ids in no pair are
+    absent and keep their own id.
 
-    Two phases, matching the edge structure the linkers produce:
+    While the pair list fits under ``DRIVER_CUTOFF`` (every recorded
+    workload below 320k docs) it is labelled on the driver in three jobs:
+    pair checkpoint, probe+fetch, labels publish.  Past it, two phases
+    matching the edge structure the linkers produce:
 
     1. **local contraction** — L1/L2/L4 (and most L3) pairs stay within
        one document; a single union-find pass over document-prefix-
        partitioned pairs resolves them in one shuffle with no iteration;
-    2. **quotient propagation** — only cross-document L3 pairs survive,
-       mapped through their local roots; the iterative min-label loop
-       runs on this (tiny) quotient graph, so round count and per-round
-       job latency no longer scale with the corpus.
+    2. **quotient** — only cross-document L3 pairs survive, mapped through
+       their local roots, and ``pair_components`` labels that (small)
+       graph.
 
-    Output is identical to running min-label on the full graph: min of
-    component == min over (local mins, quotient min).
+    Output is identical to labelling the full graph: min of component ==
+    min over (local mins, quotient min).
     """
     spark = pairs.sparkSession
-    # the merge graph is tiny relative to the corpus (a few pairs per
-    # page); run the loop on few partitions and without AQE re-planning so
-    # each iteration is one cheap job — this loop is the pipeline's main
-    # core-count-independent cost, so its fixed latency IS the scaling
-    # bottleneck at small cluster sizes
-    # NB: spark.conf is session-global — concurrent queries on the same
-    # SparkSession would run without AQE while this loop executes.  The
-    # pipeline runs its stages sequentially so this is safe here; callers
-    # sharing a session with unrelated concurrent jobs should run CC on a
-    # dedicated session (``SparkSession.newSession()`` shares the JVM but
-    # isolates conf).  The previous value is restored on exit; if it was
-    # unset we restore the documented Spark default ("true").
-    cc_parts = 8
     # materialize the pair list before multiple branches reference it
     # (concurrent branches would run the linker plan twice).  This
     # evaluates the LINKER JOIN PLAN, so it runs under the caller's AQE
@@ -431,69 +511,36 @@ def connected_components(pairs: DataFrame, max_iter: int = 12,
     # distributed phases below turn AQE off.
     _jobdesc("cc: pairs materialize (linker join plan)")
     pairs = pairs.localCheckpoint(eager=True)
-
-    # whole-graph fast path: when the entire merge-pair list fits on
-    # the driver (explicit cutoff), one fetch + union-find replaces
-    # the two-phase machinery's ~4 fixed jobs — the standard
-    # small-input adaptive choice.  Semantics identical (min id per
-    # component); the distributed phases below are the at-scale path.
-    # The cutoff probe and the fetch are FUSED: limit(cutoff+1) +
-    # Arrow toPandas is one early-terminating job (vs the previous
-    # full-scan count + row-pickled collect — two jobs, and collect()
-    # built 200k Row objects on the driver); if the limit returns more
-    # than the cutoff we discard it and take the distributed path,
-    # having paid one bounded scan instead of a full count.
-    _jobdesc("cc: driver fast-path probe+fetch")
-    probe = pairs.select("a", "b").limit(small_quotient_cutoff + 1).toPandas()
-    if len(probe) <= small_quotient_cutoff:
-        parent: dict = {}
-
-        def find(x: str) -> str:
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in zip(probe["a"].to_numpy(), probe["b"].to_numpy()):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = min(ra, rb), max(ra, rb)
-                parent[hi] = lo
-        ids = list(parent)
-        labels = [find(n) for n in ids]
-        # Arrow-path createDataFrame (pandas in, Arrow batches out) —
-        # the tuple-list path pickles row-by-row on the driver, which
-        # was a measurable core-count-independent slice of the CC stage;
-        # localCheckpoint pins the labels as JVM blocks so the THREE
-        # downstream references (csrc/cdst/canon_nodes) scan blocks
-        # instead of re-shipping the python rows per subtree.
-        out = spark.createDataFrame(
-            pd.DataFrame({"kg_id": ids, "canon_id": labels})
-            .astype("string"),
-            "kg_id string, canon_id string")
-        if not ids:
-            out = out.filter(F.lit(False))
-        _jobdesc("cc: driver labels publish")
-        out = out.localCheckpoint(eager=True)
+    labels = _driver_labels(pairs)
+    if labels is not None:
         # bounded by the cutoff by construction: hint broadcast so the
         # apply_merges/make_triples joins skip the shuffle AND the AQE
         # size-estimation replan round (the triples join tail is
         # fixed-latency-bound).  The distributed path below returns no
         # hint — its canon is corpus-sized.
-        return out.hint("broadcast")
+        return labels.withColumnRenamed("id", "kg_id").hint("broadcast")
 
+    # the merge graph is tiny relative to the corpus (a few pairs per
+    # page); run the distributed phases without AQE re-planning so each
+    # is one cheap job.
+    # NB: spark.conf is session-global — concurrent queries on the same
+    # SparkSession would run without AQE meanwhile.  The pipeline runs its
+    # stages sequentially so this is safe here; callers sharing a session
+    # with unrelated concurrent jobs should run CC on a dedicated session
+    # (``SparkSession.newSession()`` shares the JVM but isolates conf).
+    # The previous value is restored on exit; if it was unset we restore
+    # the documented Spark default ("true").
     aqe_was = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         # phase 1: kg ids are "<sha(url)[:12]>:<kind><n>" — a pair is
         # document-local iff the prefixes match
         doc_local = F.substring("a", 1, 12) == F.substring("b", 1, 12)
-        nparts = max(spark.sparkContext.defaultParallelism, cc_parts)
+        nparts = max(spark.sparkContext.defaultParallelism, 8)
         _jobdesc("cc: local contraction")
         local_map = (pairs.filter(doc_local)
                      .repartition(nparts, F.substring("a", 1, 12))
-                     .mapInPandas(_partition_union_find,
+                     .mapInPandas(_local_contraction,
                                   "kg_id string, root string")
                      .localCheckpoint(eager=True))
 
@@ -507,92 +554,19 @@ def connected_components(pairs: DataFrame, max_iter: int = 12,
                     .select(F.coalesce("ra", "a").alias("a"),
                             F.coalesce("rb", "b").alias("b"))
                     .filter(F.col("a") != F.col("b")))
-        _jobdesc("cc: quotient edges")
-        edges = (quotient.select(F.col("a").alias("x"),
-                                 F.col("b").alias("y"))
-                 .union(quotient.select(F.col("b").alias("x"),
-                                        F.col("a").alias("y")))
-                 .distinct()
-                 .repartition(cc_parts, "x")
-                 .localCheckpoint(eager=True))
-
-        # small-quotient fast path: the min-label loop costs a fixed ~4-6
-        # Spark jobs per double-step regardless of data size — pure
-        # core-count-independent latency.  When the quotient fits on the
-        # driver (an explicit, logged cutoff; the quotient holds only
-        # cross-document merge pairs, already contracted through their
-        # local roots), a driver-side union-find produces the identical
-        # min-id labels in one collect.  At web scale the quotient exceeds
-        # the cutoff and the distributed loop below runs instead.
-        n_quotient = edges.count()
-        if n_quotient <= small_quotient_cutoff:
-            parent: dict = {}
-
-            def find(x: str) -> str:
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for row in edges.collect():
-                ra, rb = find(row["x"]), find(row["y"])
-                if ra != rb:
-                    lo, hi = min(ra, rb), max(ra, rb)
-                    parent[hi] = lo
-            label_rows = [(n, find(n)) for n in parent]
-            labels = spark.createDataFrame(
-                pd.DataFrame(label_rows, columns=["id", "label"])
-                .astype("string"),
-                "id string, label string")
-            if not label_rows:
-                labels = labels.filter(F.lit(False))
-        else:
-            _jobdesc("cc: min-label init")
-            labels = (edges.select(F.col("x").alias("id"))
-                      .distinct()
-                      .withColumn("label", F.col("id"))
-                      .repartition(cc_parts, "id")
-                      .localCheckpoint(eager=True))
-
-            def step(lbls):
-                nbr_min = (edges
-                           .join(lbls, edges["y"] == lbls["id"])
-                           .groupBy("x")
-                           .agg(F.min("label").alias("nbr_label")))
-                return (lbls
-                        .join(nbr_min, lbls["id"] == nbr_min["x"], "left")
-                        .select(F.col("id"),
-                                F.least(F.col("label"),
-                                        F.coalesce(F.col("nbr_label"),
-                                                   F.col("label")))
-                                .alias("label")))
-
-            for _ in range(0, max_iter, 2):
-                # double-step between convergence checks: halves the driver
-                # round-trips; the extra pass after convergence is a no-op
-                _jobdesc("cc: min-label double-step")
-                new_labels = step(step(labels)).localCheckpoint(eager=True)
-                changed = (new_labels.alias("n")
-                           .join(labels.alias("o"), "id")
-                           .filter(F.col("n.label")
-                                   != F.col("o.label")).count())
-                labels = new_labels
-                if changed == 0:
-                    break
+        labels = pair_components(quotient)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
 
     # compose: canon(id) = quotient_label(local_root(id)), defaulting to
     # the local root / the id itself at each level
     q = labels.select(F.col("id").alias("root"),
-                      F.col("label").alias("qlabel"))
+                      F.col("canon_id").alias("qlabel"))
     composed_members = (local_map.join(q, "root", "left")
                         .select("kg_id",
                                 F.coalesce("qlabel", "root")
                                 .alias("canon_id")))
-    root_rows = labels.select(F.col("id").alias("kg_id"),
-                              F.col("label").alias("canon_id"))
+    root_rows = labels.withColumnRenamed("id", "kg_id")
     return (composed_members.unionByName(root_rows)
             .groupBy("kg_id").agg(F.min("canon_id").alias("canon_id")))
 

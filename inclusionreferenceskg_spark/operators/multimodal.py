@@ -252,12 +252,3 @@ def audio_chunks(audio: DataFrame, binary_col: str = "html",
                 rows, columns=[f.name for f in AUDIO_CHUNK.fields])
 
     return audio.select("url", binary_col).mapInPandas(run, AUDIO_CHUNK)
-
-
-def binary_stats(pages: DataFrame, binary_col: str = "html") -> DataFrame:
-    """Pure-JVM metadata over a binary column (no Python at all)."""
-    return pages.select(
-        "url",
-        F.length(F.col(binary_col)).alias("n_bytes"),
-        F.md5(F.col(binary_col)).alias("md5"),
-    )

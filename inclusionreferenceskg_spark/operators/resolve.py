@@ -26,19 +26,7 @@ normalized-title equi-join with the lenient pass as a small-side fallback.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
-
-from inclusionreferenceskg_spark.functions.pathmatch import path_matches
-
-
-@pandas_udf(T.BooleanType())
-def _path_match_udf(path: pd.Series, qualifier: pd.Series) -> pd.Series:
-    return pd.Series([
-        path_matches(list(p), list(q)) for p, q in zip(path, qualifier)
-    ])
 
 
 #: JVM-side path-subsequence confirm.  Equivalent to

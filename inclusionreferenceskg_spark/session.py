@@ -17,6 +17,13 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+#: Default driver/executor JVM options.  JDKs that dropped
+#: ``GCLockerRetryAllocationCount`` would refuse to start on it;
+#: ``IgnoreUnrecognizedVMOptions`` makes them skip it instead, while JDKs
+#: that know the flag still apply it.
+JAVA_OPTS = ("-XX:+IgnoreUnrecognizedVMOptions "
+             "-XX:+UnlockDiagnosticVMOptions "
+             "-XX:GCLockerRetryAllocationCount=64")
 
 def get_spark(app_name: str = "inclusionreferenceskg-spark",
               master: Optional[str] = None,
@@ -44,9 +51,9 @@ def get_spark(app_name: str = "inclusionreferenceskg-spark",
         # coalesces those to 1-2 tasks while leaving the data-
         # proportional UDF stages (tens of MB per partition) untouched.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                os.environ.get("IRKG_AQE_PARALLELISM_FIRST", "false"))
+                "false")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("IRKG_AQE_ADVISORY", "32m"))
+                "32m")
         # Static auto-broadcast OFF, adaptive auto-broadcast ON.  Every
         # kg-path table descends from a UDF fan-out and a localCheckpoint
         # whose LogicalRDD inherits the PRE-checkpoint size estimate (a
@@ -58,10 +65,8 @@ def get_spark(app_name: str = "inclusionreferenceskg-spark",
         # explicit (F.broadcast / hints); AQE may still convert
         # shuffle->broadcast at runtime, where it sees REAL sizes and the
         # decision self-corrects at any scale.
-        .config("spark.sql.autoBroadcastJoinThreshold",
-                os.environ.get("IRKG_STATIC_BROADCAST", "-1"))
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-                os.environ.get("IRKG_ADAPTIVE_BROADCAST", "10m"))
+        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.session.timeZone", "UTC")
@@ -78,13 +83,9 @@ def get_spark(app_name: str = "inclusionreferenceskg-spark",
         # mitigation and applies to any Arrow-UDF-heavy Spark job, local
         # or cluster.
         .config("spark.driver.extraJavaOptions",
-                os.environ.get("IRKG_DRIVER_JAVA_OPTS",
-                               "-XX:+UnlockDiagnosticVMOptions "
-                               "-XX:GCLockerRetryAllocationCount=64"))
+                os.environ.get("IRKG_DRIVER_JAVA_OPTS", JAVA_OPTS))
         .config("spark.executor.extraJavaOptions",
-                os.environ.get("IRKG_EXECUTOR_JAVA_OPTS",
-                               "-XX:+UnlockDiagnosticVMOptions "
-                               "-XX:GCLockerRetryAllocationCount=64"))
+                os.environ.get("IRKG_EXECUTOR_JAVA_OPTS", JAVA_OPTS))
     )
     # The annotator is selected per executor process inside the pandas UDFs
     # (functions/annotate_spacy.get_annotator reads these), so a driver-side

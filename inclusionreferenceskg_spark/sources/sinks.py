@@ -17,12 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_triples(triples: DataFrame, path: str,
-                  partition_by: str = "url") -> None:
-    (triples.write.mode("overwrite").partitionBy(partition_by)
-     .parquet(path))
-
-
 def to_dot(edges: DataFrame, displays: DataFrame, limit: int = 500) -> str:
     """Render a (small!) edge sample as DOT text; collects to the driver,
     guard with ``limit``."""

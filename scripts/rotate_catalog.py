@@ -47,7 +47,7 @@ def rotation(catalog: list, rounds: dict, latest: int) -> list:
         ran = [r for r in rounds if name in rounds[r]]
         greens = [r for r in ran if rounds[r][name].get("hash_match")]
         red_latest = (latest in ran
-                      and not rounds[latest][name].get("hash_match"))
+                      and rounds[latest][name].get("hash_match") is False)
         if red_latest:
             return (0, 0, 0, idx)
         if not ran:

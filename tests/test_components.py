@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from inclusionreferenceskg_spark.operators import kg
 from inclusionreferenceskg_spark.operators.kg import (
     apply_merges,
     connected_components,
@@ -113,21 +114,86 @@ def test_duplicate_split_matches_full_window(spark):
     }
 
 
-def test_components_distributed_loop_matches_fast_path(spark):
-    """The driver-side small-quotient fast path and the distributed
-    min-label loop must produce identical canonical maps; cutoff=0 forces
-    the loop on the same input."""
+def test_components_distributed_loop_matches_fast_path(spark, monkeypatch):
+    """The driver fast path and the distributed min-label loop must
+    produce identical canonical maps; cutoff=0 forces the loop on the
+    same input."""
     merges = [("1", "2"), ("2", "3"), ("3", "4"), ("2", "4"),
               ("5", "6"), ("6", "7"),
               ("9", "10"), ("9", "11"), ("9", "12")]
     fast = {(r["kg_id"], r["canon_id"])
             for r in connected_components(_pairs(spark, merges)).collect()}
+    monkeypatch.setattr(kg, "DRIVER_CUTOFF", 0)
     loop = {(r["kg_id"], r["canon_id"])
-            for r in connected_components(
-                _pairs(spark, merges),
-                small_quotient_cutoff=0).collect()}
+            for r in connected_components(_pairs(spark, merges)).collect()}
     assert fast == loop
     assert fast  # non-empty
+
+
+def _kg_id(doc: int, n: int) -> str:
+    """A kg-id-shaped id: 12-char document prefix, then the node."""
+    return f"{doc:012x}:o{n}"
+
+
+def _canon_map(spark, merges, ids):
+    """The canonical map as apply_merges/make_triples read it: an id
+    missing from the output maps to itself."""
+    got = {r["kg_id"]: r["canon_id"]
+           for r in connected_components(_pairs(spark, merges)).collect()}
+    return {i: got.get(i, i) for i in ids}
+
+
+def _min_per_component(merges, ids):
+    comp = {i: {i} for i in ids}
+    for a, b in merges:
+        if comp[a] is not comp[b]:
+            merged = comp[a] | comp[b]
+            for x in merged:
+                comp[x] = merged
+    return {i: min(comp[i]) for i in ids}
+
+
+def test_long_cross_document_chain(spark, monkeypatch):
+    """A 30-pair chain with every link across documents and the minimum
+    at one end: the distributed loop must run to convergence, not stop
+    after a fixed round budget."""
+    ids = [_kg_id(d, 0) for d in range(31)]
+    merges = list(zip(ids[1:], ids[:-1]))
+    want = _min_per_component(merges, ids)
+    assert set(want.values()) == {ids[0]}
+    assert _canon_map(spark, merges, ids) == want
+    monkeypatch.setattr(kg, "DRIVER_CUTOFF", 0)
+    assert _canon_map(spark, merges, ids) == want
+
+
+def test_mixed_local_and_cross_document_pairs(spark, monkeypatch):
+    """Within-document chains joined by a long cross-document chain, plus
+    a separate two-document component and unmerged ids.  Labelled on the
+    driver, through the local contraction with a driver-labelled quotient
+    (pair list over the cutoff, quotient under it), and fully distributed
+    — all three give the same map."""
+    merges = []
+    for d in range(16):
+        # a scrambled chain inside each document: o5-o2-o4-o1-o3
+        merges += [(_kg_id(d, 5), _kg_id(d, 2)), (_kg_id(d, 2), _kg_id(d, 4)),
+                   (_kg_id(d, 4), _kg_id(d, 1)), (_kg_id(d, 1), _kg_id(d, 3))]
+    # cross-document links from a non-root member of one document to a
+    # non-root member of the next, so the quotient runs through roots
+    merges += [(_kg_id(d + 1, 4), _kg_id(d, 5)) for d in range(15)]
+    merges += [(_kg_id(100, 2), _kg_id(101, 3)), (_kg_id(101, 3),
+                                                   _kg_id(101, 7))]
+    ids = sorted({x for p in merges for x in p}
+                 | {_kg_id(0, 0), _kg_id(200, 1)})
+    want = _min_per_component(merges, ids)
+    assert len(set(want.values())) == 4
+
+    assert _canon_map(spark, merges, ids) == want
+    n_cross = sum(a[:12] != b[:12] for a, b in merges)
+    monkeypatch.setattr(kg, "DRIVER_CUTOFF", n_cross)
+    assert len(merges) > kg.DRIVER_CUTOFF
+    assert _canon_map(spark, merges, ids) == want
+    monkeypatch.setattr(kg, "DRIVER_CUTOFF", 0)
+    assert _canon_map(spark, merges, ids) == want
 
 
 def _l3_fixture(spark):

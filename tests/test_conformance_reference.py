@@ -19,10 +19,10 @@ reference's assertions verbatim; only the construction API differs.
 
 from __future__ import annotations
 
+from inclusionreferenceskg_spark.functions.doctree import paragraph_key_for
 from inclusionreferenceskg_spark.functions.kgbuild import (
     assemble_graph,
     l3_candidates,
-    paragraph_key,
 )
 from inclusionreferenceskg_spark.functions.phrases import (
     Phrase,
@@ -240,7 +240,7 @@ def _two_article_rows():
             {"node_type": "Subparagraph", "number": 1},
         ]
         rows.append({"node_id": f"a{art}p1s1",
-                     "para_key": paragraph_key(URL, path[:3])})
+                     "para_key": paragraph_key_for(URL, path[:3])})
     return rows
 
 

@@ -35,6 +35,9 @@ REPO = os.path.dirname(HERE)
 REF = "/root/reference/inclusionreferenceskg"
 LEDGER = os.path.join(REPO, "EVAL_LEDGER.md")
 
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(REF), reason="reference corpus not available")
+
 
 def _load_script():
     spec = importlib.util.spec_from_file_location(

@@ -38,15 +38,15 @@ def test_gold_detection_greedy_in_order(spark):
     assert got.groupBy("url").count().count() == 2
 
 
-def test_neardup_clusters_distributed_matches_driver(spark):
+def test_neardup_clusters_distributed_matches_driver(spark, monkeypatch):
     """The distributed min-label/pointer-doubling CC path must agree with
     the whole-graph driver union-find on (doc_id, canon_id, cluster_size)."""
-    from inclusionreferenceskg_spark.operators import dedup
+    from inclusionreferenceskg_spark.operators import dedup, kg
 
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
     drv = dedup.neardup_clusters(docs, threshold=0.2).collect()
-    dist = dedup.neardup_clusters(docs, threshold=0.2,
-                                  driver_cutoff=0).collect()
+    monkeypatch.setattr(kg, "DRIVER_CUTOFF", 0)
+    dist = dedup.neardup_clusters(docs, threshold=0.2).collect()
     key = lambda r: (r.doc_id, r.canon_id, r.cluster_size)  # noqa: E731
     assert sorted(map(key, drv)) == sorted(map(key, dist))
     assert len(drv) > 0
