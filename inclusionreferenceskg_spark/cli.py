@@ -21,7 +21,9 @@ Usage (package shipped via --py-files; build the zip with
     python -m inclusionreferenceskg_spark.cli expire --workdir /data/kg \\
         --stage triples --keep-last 2  # snapshot GC + vacuum (no Spark)
 
-Locally the same surface runs as ``python -m inclusionreferenceskg_spark.cli``.
+``upsert`` and ``stream --mode upsert`` both refresh the catalog through
+``plans.checkpoint.run_upsert``, the one crawl-refresh path.  Locally the
+same surface runs as ``python -m inclusionreferenceskg_spark.cli``.
 """
 
 from __future__ import annotations
@@ -36,6 +38,7 @@ from inclusionreferenceskg_spark.session import get_spark
 from inclusionreferenceskg_spark.sources.catalog import Catalog
 from inclusionreferenceskg_spark.streaming.pipeline import (
     run_stream_to_triples,
+    run_stream_upsert,
 )
 
 
@@ -58,9 +61,10 @@ def main(argv=None) -> int:
              "shuffle); only safe when the snapshot is url-unique")
 
     p_upsert = sub.add_parser(
-        "upsert", help="recrawl snapshot -> incremental update of the KG "
-                       "tables (new urls appended, changed urls "
-                       "copy-on-write rewritten, unchanged urls untouched)")
+        "upsert", help="recrawl snapshot -> refresh of the KG tables via "
+                       "run_upsert, the one crawl-refresh path (new urls "
+                       "appended, changed urls copy-on-write rewritten, "
+                       "unchanged urls untouched)")
     p_upsert.add_argument("--pages", required=True)
     p_upsert.add_argument("--workdir", required=True)
 
@@ -70,14 +74,13 @@ def main(argv=None) -> int:
                           help="triples output dir (mode=triples)")
     p_stream.add_argument("--checkpoint", required=True)
     p_stream.add_argument(
-        "--mode", choices=["triples", "incremental", "upsert"],
-        default="triples",
-        help="triples: append-only sink; incremental: maintain the KG "
-             "catalog, new urls only (availableNow batch of the current "
-             "drops); upsert: also copy-on-write rewrite urls whose "
-             "content changed")
+        "--mode", choices=["triples", "upsert"], default="triples",
+        help="triples: append-only sink; upsert: maintain the KG catalog "
+             "through run_upsert (availableNow batch of the current "
+             "drops: new urls appended, urls whose content changed "
+             "copy-on-write rewritten)")
     p_stream.add_argument("--workdir", default=None,
-                          help="KG catalog dir (mode=incremental/upsert)")
+                          help="KG catalog dir (mode=upsert)")
 
     p_metrics = sub.add_parser(
         "metrics", help="per-stage / per-partition lineage metrics")
@@ -123,8 +126,8 @@ def main(argv=None) -> int:
     if args.cmd == "stream":
         if args.mode == "triples" and not args.out:
             ap.error("--out is required with --mode triples")
-        if args.mode != "triples" and not args.workdir:
-            ap.error(f"--workdir is required with --mode {args.mode}")
+        if args.mode == "upsert" and not args.workdir:
+            ap.error("--workdir is required with --mode upsert")
     if args.cmd in ("run", "upsert"):
         # fail fast with an argparse-style message for plain local paths
         # (scheme-qualified paths — hdfs://, s3a:// — defer to Spark), but
@@ -230,13 +233,8 @@ def main(argv=None) -> int:
                                       args.checkpoint)
             q.awaitTermination()
         else:
-            from inclusionreferenceskg_spark.streaming.pipeline import (
-                run_stream_incremental,
-                run_stream_upsert,
-            )
-            fn = (run_stream_incremental if args.mode == "incremental"
-                  else run_stream_upsert)
-            q = fn(spark, args.inp, args.workdir, args.checkpoint)
+            q = run_stream_upsert(spark, args.inp, args.workdir,
+                                  args.checkpoint)
             q.awaitTermination()
             cat = Catalog(args.workdir)
             print(json.dumps({

@@ -202,8 +202,7 @@ def doc_node_display(nodes: DataFrame) -> DataFrame:
 def entity_link_pairs(kg_nodes: DataFrame, l3: DataFrame,
                       nodes: DataFrame,
                       l3_broadcast_cutoff: int = 200_000,
-                      l3_hits_cutoff: int = 1_000_000,
-                      dedup: bool = True) -> DataFrame:
+                      l3_hits_cutoff: int = 1_000_000) -> DataFrame:
     """Merge pairs from all four linkers as (url, a, b) edge rows.
 
     Every group becomes a star to its min member — equivalent input to
@@ -294,7 +293,7 @@ def entity_link_pairs(kg_nodes: DataFrame, l3: DataFrame,
            .localCheckpoint(eager=True))
     n_l3 = l3r.count()
     if n_l3 == 0:
-        return fused.distinct() if dedup else fused
+        return fused.distinct()
     if n_l3 <= l3_broadcast_cutoff:
         # 1. attach the target's path: scan nodes against broadcast hash
         cand = (nodes.select(F.col("node_id").alias("target_node_id"),
@@ -332,8 +331,7 @@ def entity_link_pairs(kg_nodes: DataFrame, l3: DataFrame,
                .select(F.col("l3_url").alias("url"),
                        F.col("src_kg_id").alias("a"),
                        F.col("kn_kg_id").alias("b")))
-        out = fused.unionByName(l3p)
-        return out.distinct() if dedup else out
+        return fused.unionByName(l3p).distinct()
 
     owner_paths = nodes.select(F.col("node_id").alias("owner_node_id"),
                                F.col("url").alias("owner_url"),
@@ -361,8 +359,7 @@ def entity_link_pairs(kg_nodes: DataFrame, l3: DataFrame,
                    F.col("src_kg_id").alias("a"),
                    F.col("kn_kg_id").alias("b")))
 
-    out = fused.unionByName(l3p)
-    return out.distinct() if dedup else out
+    return fused.unionByName(l3p).distinct()
 
 
 #: Pair lists of at most this many rows are labelled on the driver (one
@@ -624,7 +621,7 @@ def apply_merges(kg_nodes: DataFrame, kg_edges: DataFrame,
                 .localCheckpoint(eager=True))
     n_dup = dup_keys.count()
     w = Window.partitionBy(*key).orderBy(F.desc("emit_seq"))
-    if n_dup > dup_broadcast_cutoff:  # pragma: no cover - web-scale path
+    if n_dup > dup_broadcast_cutoff:
         return (rewritten.withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") == 1)
                 .drop("rn", "emit_seq"))
@@ -687,6 +684,13 @@ def build_graph(nodes: DataFrame, resolved: DataFrame,
     _jobdesc("extract: wide materialize (annotate/extract UDF)")
     wide = extract_graph(nodes, resolved,
                          include_extensions).localCheckpoint(eager=True)
+    return graph_tail(wide, nodes)
+
+
+def graph_tail(wide: DataFrame, nodes: DataFrame):
+    """link -> cc -> merge -> triples over materialized graph rows; returns
+    (kg_nodes, final_edges, canon, triples).  Shared by ``build_graph``
+    and the checkpointed plan, whose ``wide`` is a committed table."""
     _jobdesc("link+cc+triples tail")
     kn = graph_nodes(wide)
     ke = graph_edges(wide).unionByName(contains_edges(nodes))

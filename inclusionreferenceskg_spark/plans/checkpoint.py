@@ -51,64 +51,9 @@ def run_checkpointed(spark: SparkSession, pages: DataFrame,
     wide = stage("graph_rows",
                  lambda: kg_ops.extract_graph(nodes, resolved))
 
-    def build_triples():
-        kn = kg_ops.graph_nodes(wide)
-        ke = kg_ops.graph_edges(wide).unionByName(
-            kg_ops.contains_edges(nodes))
-        pairs = kg_ops.entity_link_pairs(kn, kg_ops.l3_candidates(wide),
-                                         nodes)
-        canon = kg_ops.connected_components(pairs)
-        final_edges = kg_ops.apply_merges(kn, ke, canon)
-        return with_lang(kg_ops.make_triples(final_edges, kn, canon, nodes))
-
-    return stage("triples", build_triples,
+    return stage("triples",
+                 lambda: with_lang(kg_ops.graph_tail(wide, nodes)[3]),
                  partition_by=lang_cols, bucket_url="url")
-
-
-def run_incremental(spark: SparkSession, pages: DataFrame,
-                    workdir: str) -> DataFrame:
-    """Incremental snapshot update: process ONLY pages whose url has no
-    committed triples yet, fast-append their triples to the durable
-    table, recommit the lineage manifest.
-
-    Sound because every KG stage is url-scoped — parsing is per page,
-    all four linkers key on ``(url, …)``, and the L3 reference join
-    requires ``kn_url == target_url`` (`operators/kg.py`) — so a page's
-    triples depend on that page alone and new-url processing + append is
-    value-identical to a full rerun over the union.  This is the
-    crawl-refresh path at 10^12 documents: the daily delta is ~0.1% of
-    the corpus and must not trigger a full recompute.
-
-    The new-url probe is a LEFT ANTI join against the committed table's
-    ``url`` column (column-pruned scan; on Iceberg this is a
-    metadata-accelerated distinct over the bucket partitions).  The
-    delta pipeline runs in its own sub-catalog keyed by a deterministic
-    distributed hash of the new-url set, so a killed incremental run
-    resumes into the same stage tables instead of starting over.
-    """
-    pages = latest_per_url(pages)
-    cat = Catalog(workdir)
-    if not cat.is_complete("triples"):
-        return run_checkpointed(spark, pages, workdir)
-    existing = cat.read(spark, "triples")
-    new_pages = pages.join(
-        existing.select("url").distinct(), "url", "left_anti")
-    # one scalar action (a control decision, not a plan-build job):
-    # row count + order-independent url-set hash for the delta dir name
-    probe = new_pages.agg(
-        F.count("*").alias("n"),
-        F.expr("bit_xor(xxhash64(url))").alias("h")).first()
-    if probe["n"] == 0:
-        return existing
-    delta_dir = os.path.join(
-        workdir, "increments", f"inc_{probe['h'] & 0xFFFFFFFFFFFF:012x}")
-    delta = run_checkpointed(spark, new_pages, delta_dir)
-    lang_cols = ("lang",) if "lang" in delta.columns else ()
-    # drop the delta's own bucket column; the append recomputes it with
-    # the identical deterministic transform for the main table's layout
-    delta_rows = delta.drop("url_bucket")
-    return cat.write("triples", delta_rows, partition_by=lang_cols,
-                     bucket_url="url", mode="append")
 
 
 def latest_per_url(pages: DataFrame) -> DataFrame:
@@ -241,20 +186,26 @@ def _cow_upsert(spark: SparkSession, cat: Catalog, dcat: Catalog,
                 if any(f.startswith(px) for px in prefixes)]
     return cat.write(name, staged.drop("url_bucket"),
                      partition_by=partition_by, bucket_url="url",
-                     mode="upsert", replaced_files=replaced)
+                     mode="append", replaced_files=replaced)
 
 
 def run_upsert(spark: SparkSession, pages: DataFrame,
                workdir: str) -> DataFrame:
-    """Recrawl upsert: new urls are processed and appended; urls whose
-    CONTENT changed (md5 fingerprint vs the committed url_fps table) are
-    reprocessed and copy-on-write rewritten at partition granularity —
-    unchanged urls are never touched, the table is never fully rewritten.
+    """Recrawl upsert, the one crawl-refresh path: new urls are processed
+    and appended; urls whose CONTENT changed (md5 fingerprint vs the
+    committed url_fps table) are reprocessed and copy-on-write rewritten
+    at partition granularity — unchanged urls are never touched, the
+    table is never fully rewritten.
 
-    This is the general crawl-refresh path (``run_incremental`` is the
-    append-only special case where content never changes).  The url_fps
-    table commits last: it is the transaction marker that makes the
-    whole upsert idempotent under replay.
+    Sound because every KG stage is url-scoped — parsing is per page,
+    all four linkers key on ``(url, …)``, and the L3 reference join
+    requires ``kn_url == target_url`` (`operators/kg.py`) — so a page's
+    triples depend on that page alone and reprocessing only the delta is
+    value-identical to a full rerun over the latest snapshot.  The delta
+    pipeline runs in its own sub-catalog keyed by a deterministic hash
+    of the changed-url set, so a killed upsert resumes into the same
+    stage tables.  The url_fps table commits last: it is the transaction
+    marker that makes the whole upsert idempotent under replay.
     """
     pages = latest_per_url(pages)
     cat = Catalog(workdir)

@@ -28,26 +28,24 @@ class GraphResult:
     triples: DataFrame
 
 
-def run_pipeline(pages: DataFrame, include_extensions: bool = False,
-                 cache: bool = True) -> GraphResult:
+def run_pipeline(pages: DataFrame,
+                 include_extensions: bool = False) -> GraphResult:
     """The full product pipeline over a pages DataFrame."""
-    nodes = parse_pages(pages)
-    if cache:
-        # eager materialization, not a lazy .cache(): the downstream plan
-        # contains ~a dozen AQE broadcast exchanges whose build sides all
-        # derive from `nodes`, and each broadcast-exchange thread evaluates
-        # its child subtree CONCURRENTLY with the main stages — against a
-        # lazy cache they race the unfilled entry and re-run the (expensive)
-        # parse UDF subtree once per exchange.  Checkpointing `nodes` up
-        # front makes every broadcast build a cheap scan of materialized
-        # partitions and truncates lineage for downstream driver planning.
-        # Measured (2000 docs): local[2] 58s -> 37s, local[8] 16.7 -> 14.5s.
-        # (Checkpointing EVERY stage is slower — extra barriers serialize
-        # the diamond; only the shared fan-out roots `nodes` and `wide`
-        # warrant it.)
-        kg_ops._jobdesc("parse: nodes materialize (parse UDF)")
-        nodes = nodes.localCheckpoint(eager=True)
-        kg_ops._jobdesc("qualify/resolve")
+    # eager materialization, not a lazy .cache(): the downstream plan
+    # contains ~a dozen AQE broadcast exchanges whose build sides all
+    # derive from `nodes`, and each broadcast-exchange thread evaluates
+    # its child subtree CONCURRENTLY with the main stages — against a
+    # lazy cache they race the unfilled entry and re-run the (expensive)
+    # parse UDF subtree once per exchange.  Checkpointing `nodes` up
+    # front makes every broadcast build a cheap scan of materialized
+    # partitions and truncates lineage for downstream driver planning.
+    # Measured (2000 docs): local[2] 58s -> 37s, local[8] 16.7 -> 14.5s.
+    # (Checkpointing EVERY stage is slower — extra barriers serialize
+    # the diamond; only the shared fan-out roots `nodes` and `wide`
+    # warrant it.)
+    kg_ops._jobdesc("parse: nodes materialize (parse UDF)")
+    nodes = parse_pages(pages).localCheckpoint(eager=True)
+    kg_ops._jobdesc("qualify/resolve")
     qualifiers = build_qualifiers(nodes)
     resolved = resolve_targets(qualifiers, nodes)
     kn, edges, canon, triples = kg_ops.build_graph(nodes, resolved,

@@ -1877,14 +1877,13 @@ def _pagerank_sql(iters: int = 5, edges: str = None,
 ORACLES["graph_pagerank"] = _pagerank_sql()
 
 
-def _links_oracle_ctes() -> tuple:
+def _links_oracle_ctes(lim: int) -> tuple:
     """DuckDB twin of the href graph the Spark side EXTRACTS from html:
     the nav-block generator (synth.page_out_links / synth._page_row)
     emits links to (doc_id*31 + 7 + 11*k) % n for k < HTML_FANOUT, self
     dropped, urls doc_url(t) — recomputed here arithmetically so the
-    oracle is independent of the html parsing under test.  Limit matches
-    _kg_pages (import-time _kg_doc_limit, the driver's default)."""
-    lim = _kg_doc_limit()
+    oracle is independent of the html parsing under test.  ``lim`` is
+    the doc limit _kg_pages applies."""
     ks = ", ".join(str(k) for k in range(synth.HTML_FANOUT))
     url = "'https://synth.example/reg/' || cast({x} as varchar)"
     docs = f"(select doc_id from documents where doc_id < {lim})"
@@ -1900,7 +1899,7 @@ def _links_oracle_ctes() -> tuple:
     return edges, nodes
 
 
-_LINK_EDGES, _LINK_NODES = _links_oracle_ctes()
+_LINK_EDGES, _LINK_NODES = _links_oracle_ctes(_kg_doc_limit())
 
 ORACLES["graph_links_degrees"] = f"""
     with e as ({_LINK_EDGES}),
@@ -1968,11 +1967,14 @@ def _ensure_citation_oracles() -> None:
         return
     vals = ", ".join(f"('{s}', '{d}')" for s, d in edges)
     cite_edges = f"select * from (values {vals}) as _ce(src, dst)"
+    # nodes from the same captured limit as the edges: the import-time
+    # _LINK_NODES would lag a SPARK_GRAFT_KG_DOCS set after import
+    _, nodes = _links_oracle_ctes(lim)
     ORACLES["kg_citation_authority"] = _pagerank_sql(
-        edges=cite_edges, nodes=_LINK_NODES)
+        edges=cite_edges, nodes=nodes)
     ORACLES["kg_communities"] = (
         f"with e as ({cite_edges}),"
-        + graph_ops.label_propagation_sql(iters=4, nodes=_LINK_NODES)
+        + graph_ops.label_propagation_sql(iters=4, nodes=nodes)
         + " order by node")
     ORACLES["kg_cocitation"] = f"""
         with e as ({cite_edges})

@@ -104,37 +104,38 @@ class Catalog:
               mode: str = "overwrite",
               replaced_files: Optional[Sequence[str]] = None) -> DataFrame:
         """Write a stage table + manifest; returns the re-read DataFrame
-        (cuts lineage like an Iceberg commit).  ``mode="append"`` is the
-        incremental-snapshot path: the delta lands as new files under the
-        same partition layout (an Iceberg fast-append) and the manifest
-        is recommitted from the full table.
-        ``mode="upsert"`` is the copy-on-write commit of the recrawl
-        path (``plans.checkpoint.run_upsert``): physically an append,
-        with ``replaced_files`` (the old files of the rewritten
-        partitions) dropped from the new snapshot's file list but left
-        on disk — shadowed, like ``compact`` — so every pre-upsert
-        snapshot stays time-travelable (and ``rollback`` can undo a bad
-        recrawl) until ``expire_snapshots`` vacuums them."""
+        (cuts lineage like an Iceberg commit).  ``mode="append"`` is an
+        Iceberg fast-append: the delta lands as new files under the same
+        partition layout and the manifest is recommitted from the full
+        table.  With ``replaced_files`` (the old files of partitions the
+        recrawl path ``plans.checkpoint.run_upsert`` rewrites) it is the
+        copy-on-write commit: those files drop out of the new snapshot's
+        file list but stay on disk — shadowed, like ``compact`` — so every
+        pre-upsert snapshot stays time-travelable (and ``rollback`` can
+        undo a bad recrawl) until ``expire_snapshots`` vacuums them."""
+        if mode not in ("overwrite", "append"):
+            raise ValueError(f"Catalog.write mode must be 'overwrite' or "
+                             f"'append', not {mode!r}")
         t0 = time.perf_counter()
         cols = list(partition_by)
         if bucket_url:
             df = with_bucket(df, bucket_url, n_buckets)
             cols.append("url_bucket")
         path = self.table_path(name)
-        # compaction/upsert shadow replaced files in place (they stay on
-        # disk for time travel until expire_snapshots), so for
-        # non-overwrite commits the new table state is METADATA-resolved:
-        # surviving files of the previous snapshot ∪ the files this write
-        # adds — never a raw directory listing, which would double-count
-        # shadows
+        # compaction and copy-on-write appends shadow replaced files in
+        # place (they stay on disk for time travel until
+        # expire_snapshots), so an append's new table state is
+        # METADATA-resolved: surviving files of the previous snapshot ∪
+        # the files this write adds — never a raw directory listing,
+        # which would double-count shadows
         prev_files = None
-        if mode in ("append", "upsert"):
+        if mode == "append":
             drop = {_norm(f) for f in (replaced_files or ())}
             prev_files = [f for f in self._latest_files(name)
                           if os.path.exists(f) and f not in drop]
         before = set(_list_data_files(path)) if prev_files is not None \
             else set()
-        writer = df.write.mode("append" if mode == "upsert" else mode)
+        writer = df.write.mode(mode)
         if cols:
             writer = writer.partitionBy(*cols)
         writer.parquet(path)
@@ -185,23 +186,24 @@ class Catalog:
     # ------------------------------------------------ snapshot log
     # Iceberg-style time travel: every commit records the exact data-file
     # set, so a past snapshot is re-readable as long as its files survive.
-    # Fast-appends keep all prior files; upsert and compact SHADOW the
-    # files they replace (on disk, out of the new snapshot) until
-    # expire_snapshots vacuums them — full history either way; only
-    # overwrite physically deletes files, so only it resets the log.
+    # Fast-appends keep all prior files; copy-on-write appends and
+    # compact SHADOW the files they replace (on disk, out of the new
+    # snapshot) until expire_snapshots vacuums them — full history either
+    # way; only overwrite physically deletes files, so only it resets the
+    # log.
 
     def _snapshot_dir(self, name: str) -> str:
         return os.path.join(self.root, "_lineage", f"{name}.snapshots")
 
     def _commit_snapshot(self, name: str, manifest: dict, mode: str,
                          files: Sequence[str]) -> None:
-        # append/compact/upsert keep every prior file on disk (upsert and
-        # compact merely shadow the replaced ones), so history stays
-        # readable; only overwrite physically deletes files (it wipes the
-        # directory), so only it resets the snapshot log rather than
-        # leave dangling versions
+        # append/compact keep every prior file on disk (they merely
+        # shadow the replaced ones), so history stays readable; only
+        # overwrite physically deletes files (it wipes the directory), so
+        # only it resets the snapshot log rather than leave dangling
+        # versions
         d = self._snapshot_dir(name)
-        if mode not in ("append", "compact", "upsert") and os.path.isdir(d):
+        if mode not in ("append", "compact") and os.path.isdir(d):
             for f in os.listdir(d):
                 os.unlink(os.path.join(d, f))
         os.makedirs(d, exist_ok=True)

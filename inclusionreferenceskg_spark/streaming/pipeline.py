@@ -56,41 +56,10 @@ def run_stream_to_triples(spark: SparkSession, input_dir: str,
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        result = run_pipeline(batch_df, cache=True)
+        result = run_pipeline(batch_df)
         (result.triples
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(output_dir))
-
-    writer = (pages.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def run_stream_incremental(spark: SparkSession, input_dir: str,
-                           workdir: str, checkpoint_dir: str,
-                           available_now: bool = True):
-    """Crawl-refresh stream: each micro-batch of (re)crawled pages updates
-    the DURABLE lineage-manifested triples table via
-    ``plans.checkpoint.run_incremental``.
-
-    Unlike ``run_stream_to_triples`` (per-batch append of everything),
-    this is the production recrawl path: a url already committed to the
-    triples table is skipped by the incremental LEFT ANTI probe, so the
-    sink is idempotent under at-least-once delivery — a batch replayed
-    after a crash appends nothing the second time, giving exactly-once
-    TABLE state even beyond what the streaming checkpoint guarantees.
-    """
-    from inclusionreferenceskg_spark.plans.checkpoint import run_incremental
-
-    pages = stream_pages(spark, input_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        run_incremental(spark, batch_df, workdir)
 
     writer = (pages.writeStream
               .foreachBatch(process)

@@ -35,6 +35,7 @@ DOCS = os.environ.get("WATCH_DOCS", "80000")
 CLEAN = float(os.environ.get("WATCH_CLEAN", "0.13"))
 HOURS = float(os.environ.get("WATCH_HOURS", "4.0"))
 OUT = os.environ.get("WATCH_OUT", "/tmp/watcher_legs.jsonl")
+TRIALS = int(os.environ.get("WATCH_TRIALS", "1"))
 
 
 def quantum() -> float:
@@ -64,12 +65,9 @@ def load1() -> float:
 TASKSET = os.environ.get("WATCH_TASKSET", "") == "1"
 
 
-TRIALS = os.environ.get("WATCH_TRIALS", "1")
-
-
 def run_leg(cpus: int) -> dict:
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
-               SPARK_GRAFT_KG_ONLY="1", SPARK_GRAFT_BENCH_TRIALS=TRIALS,
+               SPARK_GRAFT_KG_ONLY="1", SPARK_GRAFT_BENCH_TRIALS=str(TRIALS),
                SPARK_GRAFT_BENCH_DOCS=DOCS)
     cmd = [sys.executable, os.path.join(REPO, "bench.py")]
     if TASKSET:
@@ -146,7 +144,7 @@ def main() -> None:
             time.sleep(30)
             continue
         rec = {"cpus": cpus, "docs": int(DOCS), "taskset": TASKSET,
-               "trials": int(TRIALS),
+               "trials": TRIALS,
                "kg_secs": r["queries"]["kg_triples"], "rate": r["value"],
                "n_triples": r["n_triples"],
                "gate_quantum": [round(q1, 4), round(q2, 4)],

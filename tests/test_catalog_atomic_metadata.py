@@ -8,6 +8,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from inclusionreferenceskg_spark.sources.catalog import Catalog
 
 
@@ -52,3 +54,15 @@ def test_metadata_commit_leaves_no_partial_json(spark, tmp_path_factory):
                 json.load(f)
             seen += 1
     assert seen >= 3  # manifest + 2 snapshots
+
+
+def test_unknown_write_mode_refused_before_any_write(spark,
+                                                     tmp_path_factory):
+    work = str(tmp_path_factory.mktemp("badmode"))
+    cat = Catalog(work)
+    df = spark.createDataFrame([("u1", "a")], "url string, val string")
+    cat.write("t", df, bucket_url="url")
+    with pytest.raises(ValueError, match="overwrite"):
+        cat.write("t", df, bucket_url="url", mode="ignore")
+    assert cat._snapshot_versions("t") == [1]
+    assert cat.read(spark, "t").count() == 1

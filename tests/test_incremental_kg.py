@@ -1,4 +1,5 @@
-"""Incremental KG update: new-url delta + append == full one-shot run."""
+"""Append-only crawl refresh through ``run_upsert``: a new-url delta +
+append == full one-shot run."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ from pyspark.sql import functions as F
 from inclusionreferenceskg_spark import synth
 from inclusionreferenceskg_spark.plans.checkpoint import (
     run_checkpointed,
-    run_incremental,
+    run_upsert,
 )
 
 
@@ -26,12 +27,12 @@ def test_incremental_equals_oneshot(spark, tmp_path_factory):
     first = pages_all.filter(F.col("doc_rank") < 8)
 
     # snapshot 1: cold start falls through to the full checkpointed run
-    t1 = run_incremental(spark, first, inc_dir)
+    t1 = run_upsert(spark, first, inc_dir)
     n1 = t1.count()
     assert n1 > 0
 
     # snapshot 2: 4 new urls — only they are processed, result appended
-    t2 = run_incremental(spark, pages_all, inc_dir)
+    t2 = run_upsert(spark, pages_all, inc_dir)
     want = run_checkpointed(spark, pages_all, full_dir)
     assert _rows(t2) == _rows(want)
 
@@ -57,10 +58,10 @@ def test_catalog_time_travel_across_appends(spark, tmp_path_factory):
 
     work = str(tmp_path_factory.mktemp("tt"))
     pages_all = synth.synthesize_pages(spark, 10)
-    t1 = run_incremental(
+    t1 = run_upsert(
         spark, pages_all.filter(F.col("doc_rank") < 6), work)
     r1 = _rows(t1)
-    t2 = run_incremental(spark, pages_all, work)
+    t2 = run_upsert(spark, pages_all, work)
     r2 = _rows(t2)
     assert len(r2) > len(r1)
 
@@ -76,8 +77,8 @@ def test_catalog_time_travel_across_appends(spark, tmp_path_factory):
 def test_incremental_noop_on_no_new_urls(spark, tmp_path_factory):
     inc_dir = str(tmp_path_factory.mktemp("inc2"))
     pages = synth.synthesize_pages(spark, 6)
-    t1 = run_incremental(spark, pages, inc_dir)
+    t1 = run_upsert(spark, pages, inc_dir)
     r1 = _rows(t1)
-    t2 = run_incremental(spark, pages, inc_dir)  # same snapshot again
+    t2 = run_upsert(spark, pages, inc_dir)  # same snapshot again
     assert _rows(t2) == r1
     assert not os.path.exists(os.path.join(inc_dir, "increments"))

@@ -4,6 +4,7 @@ extracted edge list plus structural invariants."""
 
 from __future__ import annotations
 
+import re
 from collections import defaultdict
 
 from inclusionreferenceskg_spark import queries as Q
@@ -114,3 +115,20 @@ def test_kg_communities_match_lpa_simulator(spark):
     assert got == labels
     # non-trivial: strictly fewer communities than documents
     assert 1 < len(set(got.values())) < len(urls)
+
+
+def test_citation_oracles_use_one_doc_limit(monkeypatch):
+    """Edge and node CTEs of the lazily built citation oracles come from
+    the one doc limit read at build time, not the import-time one."""
+    kg = ("kg_citation_authority", "kg_cocitation", "kg_communities")
+    monkeypatch.setattr(Q, "ORACLES", {k: v for k, v in Q.ORACLES.items()
+                                       if k not in kg})
+    lim = Q._kg_doc_limit() + 7
+    monkeypatch.setenv("SPARK_GRAFT_KG_DOCS", str(lim))
+    Q._ensure_citation_oracles()
+    for name in ("kg_citation_authority", "kg_communities"):
+        sql = Q.ORACLES[name]
+        assert set(re.findall(r"doc_id < (\d+)", sql)) == {str(lim)}
+        cited = {int(u) for u in re.findall(r"synth\.example/reg/(\d+)'",
+                                            sql)}
+        assert cited and max(cited) < lim

@@ -1,4 +1,4 @@
-"""Streaming crawl-refresh: foreachBatch + run_incremental gives
+"""Append-only streaming crawl-refresh: foreachBatch + run_upsert gives
 exactly-once TABLE state, idempotent under redelivery."""
 
 from __future__ import annotations
@@ -10,9 +10,7 @@ from pyspark.sql import functions as F
 from inclusionreferenceskg_spark import synth
 from inclusionreferenceskg_spark.plans.checkpoint import run_checkpointed
 from inclusionreferenceskg_spark.sources.catalog import Catalog
-from inclusionreferenceskg_spark.streaming.pipeline import (
-    run_stream_incremental,
-)
+from inclusionreferenceskg_spark.streaming.pipeline import run_stream_upsert
 
 
 def _rows(df):
@@ -30,7 +28,7 @@ def test_stream_incremental_crawl_refresh(spark, tmp_path_factory):
     # drop 1: docs 0-7
     pages_all.filter(F.col("doc_rank") < 8).write.mode(
         "append").parquet(inp)
-    q = run_stream_incremental(spark, inp, work, ckpt)
+    q = run_stream_upsert(spark, inp, work, ckpt)
     q.awaitTermination(600)
     n1 = Catalog(work).read(spark, "triples").count()
     assert n1 > 0
@@ -38,7 +36,7 @@ def test_stream_incremental_crawl_refresh(spark, tmp_path_factory):
     # drop 2: docs 4-9 — a recrawl overlap; only 8/9 are new urls
     pages_all.filter(F.col("doc_rank") >= 4).write.mode(
         "append").parquet(inp)
-    q = run_stream_incremental(spark, inp, work, ckpt)
+    q = run_stream_upsert(spark, inp, work, ckpt)
     q.awaitTermination(600)
 
     got = Catalog(work).read(spark, "triples")
@@ -47,9 +45,8 @@ def test_stream_incremental_crawl_refresh(spark, tmp_path_factory):
     assert _rows(got) == _rows(want)
 
     # redelivery: replay EVERY file with a fresh streaming checkpoint —
-    # the url-level anti-join makes the table state idempotent anyway
-    q = run_stream_incremental(spark, inp, work,
-                               os.path.join(root, "ckpt2"))
+    # the fingerprint probe makes the table state idempotent anyway
+    q = run_stream_upsert(spark, inp, work, os.path.join(root, "ckpt2"))
     q.awaitTermination(600)
     again = Catalog(work).read(spark, "triples")
     assert _rows(again) == _rows(want)

@@ -222,7 +222,7 @@ def _injected_upsert_crash(spark, tmp_path_factory, monkeypatch,
 
     def boom(self, name, df, *a, **kw):
         if (armed["on"] and name == crash_table
-                and kw.get("mode") == "upsert"):
+                and kw.get("replaced_files") is not None):
             armed["on"] = False
             raise RuntimeError("injected crash")
         return real_write(self, name, df, *a, **kw)
