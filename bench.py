@@ -10,8 +10,9 @@ throughput (emitted triples per second) over the deterministic synthetic
 corpus derived from the ``documents`` table.  Per-query wall-clock seconds
 for the other operator families are reported under ``queries``.
 
-Scaling runs (`scripts/bench_scaling.py`) execute this same script in fresh
-JVMs at two parallelism levels and record BENCH/BASELINE.md.
+Scaling runs (`scripts/bench_scaling_watcher.py`) execute this same script in
+fresh JVMs at two parallelism levels and record BENCH/BASELINE.md; the
+watcher imports this module's CPU-quantum meter (`_cpu_quantum`, `_load1`).
 """
 
 from __future__ import annotations
@@ -25,8 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# the local JVM hosts driver+executors+caches; size for the 128 GiB box
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
 
 #: per-query benchmark set (name -> catalog key); kg_triples is the
 #: headline and measured separately for the throughput metric
@@ -141,6 +140,9 @@ def main() -> None:
     from inclusionreferenceskg_spark import queries as catalog
     from inclusionreferenceskg_spark.session import get_spark
 
+    # the local JVM hosts driver+executors+caches; size for a 128 GiB
+    # host (set here, not at import: the scaling watcher imports the meter)
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
     load_before = _load1()
     spark = get_spark("irkg-bench", master=f"local[{CPUS}]",
                       shuffle_partitions=CPUS)

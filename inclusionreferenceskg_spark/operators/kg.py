@@ -609,8 +609,7 @@ def apply_merges(kg_nodes: DataFrame, kg_edges: DataFrame,
                  # anti-join, winner semi-join+window); without the
                  # barrier each re-evaluates the edge-scale canon-rewrite
                  # join — measured as the largest slice of the 16-core
-                 # fixed tail (profile_job_gaps: ~12 s of re-evaluation
-                 # at 80k docs)
+                 # fixed tail (~12 s of re-evaluation at 80k docs)
                  .localCheckpoint(eager=True))
     key = ["url", "src", "dst"]
     _jobdesc("merge: dup-key census")

@@ -74,6 +74,14 @@ def _list_data_files(root: str) -> list:
     return sorted(out)
 
 
+def _partition_cols(root: str, data_file: str) -> list:
+    """Partition columns as laid out on disk under ``root`` (e.g.
+    ``lang=en/url_bucket=3/part-0.parquet`` -> ``["lang", "url_bucket"]``)."""
+    rel = os.path.relpath(data_file, root)
+    return [seg.split("=", 1)[0]
+            for seg in rel.split(os.sep)[:-1] if "=" in seg]
+
+
 def with_bucket(df: DataFrame, url_col: str = "url",
                 n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """Stable hash bucket column (the bucket(url) transform)."""
@@ -237,14 +245,9 @@ class Catalog:
 
     def history(self, name: str) -> list:
         """Snapshot log (oldest first): [{version, rows, checksum}, ...]."""
-        d = self._snapshot_dir(name)
-        if not os.path.isdir(d):
-            return []
         out = []
-        for fn in sorted(os.listdir(d),
-                         key=lambda s: int(s[1:-5])):
-            with open(os.path.join(d, fn)) as f:
-                s = json.load(f)
+        for v in self._snapshot_versions(name):
+            s = self._snapshot(name, v)
             out.append({k: s[k] for k in ("version", "rows", "checksum")})
         return out
 
@@ -302,12 +305,7 @@ class Catalog:
             return {"stage": name, "files_before": 0, "files_after": 0,
                     "rows": prev["rows"], "wall_ms": 0}
         cur = self.read(spark, name)
-        # partition columns as laid out on disk (e.g. lang=en/url_bucket=3)
-        cols = []
-        if old_files:
-            rel = os.path.relpath(old_files[0], path)
-            cols = [seg.split("=", 1)[0]
-                    for seg in rel.split(os.sep)[:-1] if "=" in seg]
+        cols = _partition_cols(path, old_files[0])
         before = set(_list_data_files(path))
         writer_df = (cur.repartition(*[F.col(c) for c in cols])
                      if cols else cur.coalesce(1))
@@ -355,9 +353,7 @@ class Catalog:
         path = self.table_path(name)
         if files:
             out = spark.read.option("basePath", path).parquet(*files)
-            rel = os.path.relpath(files[0], path)
-            cols = [seg.split("=", 1)[0]
-                    for seg in rel.split(os.sep)[:-1] if "=" in seg]
+            cols = _partition_cols(path, files[0])
         else:
             out = self.read(spark, name).limit(0)
             cols = []

@@ -35,6 +35,8 @@ def test_stray_files_in_snapshot_dir_ignored(spark, tmp_path_factory):
     cat.write("t", df2, bucket_url="url", mode="append")
     assert cat._snapshot_versions("t") == [1, 2]
     assert cat.read(spark, "t").count() == 3
+    # the snapshot log (irkg status output) skips the debris too
+    assert [h["version"] for h in cat.history("t")] == [1, 2]
 
 
 def test_metadata_commit_leaves_no_partial_json(spark, tmp_path_factory):

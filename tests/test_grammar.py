@@ -48,3 +48,37 @@ def test_detector_offsets():
     (m,) = detect(text)
     assert m["start"] == 4
     assert text[m["start"]:m["start"] + len(m["text"])] == m["text"]
+
+
+#: adversarial page shapes for the detector regex; a backtracking blow-up
+#: on any of them turns one MB-sized page into a stalled task
+ADVERSARIAL = {
+    "dense_citations": "Article 5(1)(a), Articles 8 and 9 of Regulation "
+                       "(EU) 2016/679, ",
+    "repeated_paragraph_of": "paragraph 1 of Article ",
+    "one_long_word": "x",
+    "digit_paren_soup": "(1)(2(3)4)((5)6(7",
+    "repeated_point_of": "point (a) of paragraph 2, ",
+}
+
+
+def _best_detect_secs(text: str) -> float:
+    import time
+    best = float("inf")
+    for _ in range(3):
+        t0 = time.perf_counter()
+        detect(text)
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
+def test_detector_linear_time():
+    """detect() scales linearly on adversarial input: 10x the chars may
+    cost at most 30x the time (linear reads ~10, quadratic ~100)."""
+    for name, unit in ADVERSARIAL.items():
+        secs = {}
+        for n in (20_000, 200_000):
+            text = (unit * (n // len(unit) + 1))[:n]
+            secs[n] = _best_detect_secs(text)
+        ratio = secs[200_000] / secs[20_000]
+        assert ratio <= 30, (name, secs, ratio)
