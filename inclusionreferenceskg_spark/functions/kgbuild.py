@@ -24,6 +24,12 @@ token is assigned its owning document node by character offset
 Edges carry a write sequence so the reference's ``add_edge`` overwrite
 semantics (one edge per (u,v), last write wins, knowledge_graph.py:23-43)
 replay deterministically downstream.
+
+:func:`document_graph` finishes one document's graph on top of that: every
+linker except a cross-document L3 hit keys on the document, so linking,
+the merge (``union_find``), the canonical edge rewrite and the display
+strings all run here; only the cross-document L3 candidates are left to
+the Spark step in ``operators/kg.py``.
 """
 
 from __future__ import annotations
@@ -31,9 +37,11 @@ from __future__ import annotations
 import bisect
 import hashlib
 import itertools
-from typing import Dict, List, Optional
+from collections import defaultdict
+from typing import Dict, Iterable, List, Optional
 
 from inclusionreferenceskg_spark.functions.annotate_spacy import get_annotator
+from inclusionreferenceskg_spark.functions.grammar import detect
 from inclusionreferenceskg_spark.functions.phrases import (
     Phrase,
     PhraseExtractor,
@@ -53,6 +61,24 @@ def _coref_lemmas(tok: Tok) -> List[str]:
     doc = tok.sent.doc
     toks = [doc[j] for j in tok.coref] if tok.coref else [tok]
     return sorted({t.lemma for t in toks})
+
+
+def node_mentions(content: Optional[str], targets) -> List[Dict]:
+    """One node's detected mentions, each with its resolved targets
+    (``[{'node_id', 'url', 'display'}]``).  ``targets`` are the node's
+    resolved rows (mention_idx, qual_idx, start, text, target_node_id,
+    target_url, target_display) or None; a row belongs to the mention at
+    its (start, text), in (mention_idx, qual_idx) order."""
+    mentions = detect(content or "")
+    tmap: Dict[tuple, List[Dict]] = {}
+    for t in sorted(() if targets is None else targets,
+                    key=lambda x: (x["mention_idx"], x["qual_idx"])):
+        tmap.setdefault((t["start"], t["text"]), []).append(
+            {"node_id": t["target_node_id"], "url": t["target_url"],
+             "display": t["target_display"]})
+    for m in mentions:
+        m["targets"] = tmap.get((m["start"], m["text"]), [])
+    return mentions
 
 
 def render_document(url: str, node_rows: List[Dict],
@@ -243,3 +269,142 @@ def l3_candidates(url: str, doc: List[Tok],
                     "target_url": target.get("url"),
                 })
     return l3
+
+
+def union_find(pairs: Iterable) -> dict:
+    """``{id: min id of its component}`` for every id in ``pairs``; the
+    package's one union-find (the per-document merge and the driver path
+    of ``operators.kg.pair_components``)."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def path_key(path) -> tuple:
+    """A node path as a tuple of ``(node_type, number, title)`` tuples.
+    Arrow hands a struct's int field over as float when the batch holds a
+    null, so numbers are normalized back to int (NaN/None -> None)."""
+    return tuple((e["node_type"],
+                  None if e["number"] is None or e["number"] != e["number"]
+                  else int(e["number"]),
+                  e["title"]) for e in path)
+
+
+def node_display(path: tuple) -> str:
+    """A document node's display string, ``ImmutableNodeView.__str__``
+    (node.py:134-135): "<type> <number>[: <title>]" of the path's last
+    element (the twin of ``operators.kg.node_display``)."""
+    node_type, number, title = path[-1]
+    return f"{node_type} {number}" + (f": {title}" if title else "")
+
+
+def link_pairs(url: str, kg_nodes: List[Dict], l3: List[Dict],
+                paths: Dict[str, tuple]) -> List[tuple]:
+    """Merge pairs of one document: L1 same token (same_token_linker.py:
+    9-18), L2 same coref-resolved (lemma, tag) among a paragraph's
+    PhraseObjects (same_lemma_in_same_paragraph_linker.py:21-54), L4 same
+    proper-noun surface (proper_noun_linker.py:12-26), and L3 for the
+    candidates whose target is in this document: a same-lemma-set kg node
+    whose owning node lies under the target's path (reference_linker.py:
+    62-89)."""
+    groups = defaultdict(list)
+    by_lemmas = defaultdict(list)
+    for r in kg_nodes:
+        groups[("L1", r["token_key"])].append(r["kg_id"])
+        if r["kind"] == "object" and r["para_key"] is not None:
+            groups[("L2", r["para_key"], r["coref_lemma"],
+                    r["coref_tag"])].append(r["kg_id"])
+        if r["propn_key"] is not None:
+            groups[("L4", r["propn_key"])].append(r["kg_id"])
+        by_lemmas[r["lemma_set_key"]].append(r)
+    pairs = [(m[0], x) for m in groups.values() for x in m[1:]]
+    for c in l3:
+        t_path = paths.get(c["target_node_id"])
+        if c["target_url"] != url or t_path is None:
+            continue
+        n = len(t_path)
+        pairs += [(c["src_kg_id"], r["kg_id"])
+                  for r in by_lemmas[c["lemma_set_key"]]
+                  if r["kg_id"] != c["src_kg_id"]
+                  and paths[r["node_id"]][:n] == t_path]
+    return pairs
+
+
+def rewrite_edges(edges: List[Dict], canon: Dict[str, str]) -> List[Dict]:
+    """One document's edges rewritten to canonical ids (``canon``: id ->
+    canonical id, absent = itself), self-loops dropped
+    (knowledge_graph.py:93) and one edge per (src, dst), the one with the
+    highest ``emit_seq`` (add_edge overwrite, knowledge_graph.py:23-43)."""
+    final: Dict[tuple, Dict] = {}
+    for e in edges:
+        src, dst = canon.get(e["src"], e["src"]), canon.get(e["dst"], e["dst"])
+        kept = final.get((src, dst))
+        if src != dst and (kept is None or e["emit_seq"] > kept["emit_seq"]):
+            final[(src, dst)] = {**e, "src": src, "dst": dst}
+    return list(final.values())
+
+
+def document_graph(url: str, node_rows: List[Dict],
+                   mentions_by_node: Dict[str, List[Dict]],
+                   include_extensions: bool = False) -> Dict[str, list]:
+    """One document's final graph: :func:`render_document`, then the
+    document-scoped linkers, the merge, the canonical edge rewrite and the
+    display strings.
+
+    :param node_rows: the document's nodes in pre-order, dicts with
+        node_id/content/para_key/parent_id/path.
+    :param mentions_by_node: as for :func:`render_document`; each target
+        is ``{'node_id', 'url', 'display'}``, ``display`` being the
+        target node's display string (needed when it is in another
+        document).
+    :return: ``kg_nodes`` (with ``canon_id``: the document-local canonical
+        id, None for a node in no merge pair); ``edges`` (``contains``
+        edges included at ``emit_seq`` -1, rewritten to canonical ids,
+        self-loops dropped, one per (src, dst) with the highest
+        ``emit_seq``, carrying ``subject``/``object`` display strings or
+        None where an endpoint has none); ``l3`` (the candidates whose
+        target is in another document, with ``canon_id`` of their source);
+        ``triples`` (``(url, subject, relation, object)``, the E4
+        comparator's view: no defines/contains edges,
+        evaluate_kg_creation.py:25).
+    """
+    rows = render_document(url, node_rows, mentions_by_node,
+                           include_extensions)
+    kg_nodes = rows["kg_nodes"]
+    paths = {r["node_id"]: path_key(r["path"]) for r in node_rows}
+    canon = union_find(link_pairs(url, kg_nodes, rows["l3"], paths))
+
+    display = {t["node_id"]: t["display"]
+               for ms in mentions_by_node.values() for m in ms
+               for t in m.get("targets") or ()}
+    display.update((nid, node_display(p)) for nid, p in paths.items())
+    for r in kg_nodes:
+        r["canon_id"] = canon.get(r["kg_id"])
+        if r["canon_id"] in (None, r["kg_id"]):
+            display[r["kg_id"]] = r["token_text"]
+
+    contains = [{"url": url, "src": r["parent_id"], "dst": r["node_id"],
+                 "label": "contains", "attrs": {}, "emit_seq": -1}
+                for r in node_rows if r["parent_id"] is not None]
+    edges = [{**e, "subject": display.get(e["src"]),
+              "object": display.get(e["dst"])}
+             for e in rewrite_edges(contains + rows["kg_edges"], canon)]
+
+    l3 = [{**c, "canon_id": canon.get(c["src_kg_id"], c["src_kg_id"])}
+          for c in rows["l3"] if c["target_url"] != url]
+    triples = [(url, e["subject"], e["label"], e["object"]) for e in edges
+               if e["label"] not in ("defines", "contains")
+               and e["subject"] is not None and e["object"] is not None]
+    return {"kg_nodes": kg_nodes, "edges": edges, "l3": l3,
+            "triples": triples}

@@ -17,8 +17,7 @@ for the middle regime — and for making the skew strategy explicit and
 testable rather than an AQE runtime accident (the north rule asks for
 "partitioning / shuffle / skew handled explicitly").
 
-The same pattern already guards the KG linker blocking
-(`operators/kg.py` groupBy-min blocking) and the dedup bucket caps
+The same pattern already guards the dedup bucket caps
 (`operators/dedup.py`); this module generalizes it to arbitrary
 equi-joins.
 """

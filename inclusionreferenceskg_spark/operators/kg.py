@@ -3,39 +3,47 @@ canonical rewrite, triple export.
 
 Dataflow (SURVEY §3.1):
 
-    nodes ⋈ resolved-mentions ──mapInPandas[annotate+phrases+render]──►
-        kg_nodes / kg_edges / L3-candidates        (one pass, wide rows)
-    kg_nodes ──groupBy blocking keys (L1/L2/L4)──► merge pairs
-    L3-candidates ⋈ nodes(path-prefix) ⋈ kg_nodes ─► merge pairs
-    merge pairs ──connected components (pair_components)──► canonical map
-    kg_edges ⋈ canonical map ──rewrite+dedup──► final graph
-    final graph ⋈ display strings ──► (subject, relation, object) triples
+    nodes ⋈ resolved-mentions ──mapInPandas[document_graph]──►
+        per url: kg nodes (+ local canonical id), final edges (+ display
+        strings), cross-document L3 candidates       (one pass, wide rows)
+    cross-document L3 candidates ⋈ nodes(path-prefix) ⋈ kg nodes
+        ──► merge pairs over local canonical ids     (entity_link_pairs)
+    merge pairs ──pair_components──► quotient labels (connected_components)
+    affected documents' edges ⋈ labels ──relabel + dedup──► final graph
+                                                     (apply_merges)
+    final graph ──re-display relabelled ids──► (subject, relation, object)
+                                                     (make_triples)
 
-Scale: the extraction pass is narrow; L1/L2/L4 are single shuffles on their
-blocking keys (Zipfian lemma keys ride on AQE skew handling; key spaces are
-already salted by construction because every key embeds its paragraph/node
-identity).
+Every linker keys on the document except an L3 candidate whose target is
+in another document, and edge dedup keys on ``(url, src, dst)``.  So the
+per-document pass (``kgbuild.document_graph``, one Python call per url
+inside the url-sorted ``mapInPandas``) links, merges, rewrites, dedups and
+displays each document on its own, and the Spark tail only handles the
+cross-document L3 case.  Without such candidates it costs one emptiness
+probe; with them, only the documents the cross-document components touch
+are relabelled (canonical = min id of the component = min over the local
+minima) and re-deduplicated (last write = max over the per-document
+maxima of ``emit_seq``).
 
 Connected components: this module holds the package's one CC engine,
-``pair_components`` — one union-find (``_union_find``), used on the driver
-while the pair list fits under ``DRIVER_CUTOFF`` and inside the
-per-document contraction kernel, and one distributed loop (min-label
-pointer doubling until no label changes).  ``connected_components`` adds
-the KG-specific parts: the pair checkpoint, the broadcast hint, and the
-per-document contraction whose cross-document quotient the engine
-labels.  ``dedup.neardup_clusters`` and ``graph.wcc`` call the engine
+``pair_components`` — the union-find (``kgbuild.union_find``) on the
+driver while the pair list fits under ``DRIVER_CUTOFF``, else one
+distributed loop (min-label pointer doubling until no label changes).
+``connected_components`` labels the KG's cross-document quotient with
+it; ``dedup.neardup_clusters`` and ``graph.wcc`` call the engine
 directly.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from inclusionreferenceskg_spark.functions.grammar import detect
-from inclusionreferenceskg_spark.functions.kgbuild import render_document
+from inclusionreferenceskg_spark.functions.kgbuild import (
+    document_graph,
+    node_mentions,
+    union_find,
+)
 
 
 def _jobdesc(desc: str) -> None:
@@ -65,11 +73,15 @@ GRAPH_ROWS = T.StructType([
     T.StructField("coref_tag", T.StringType()),
     T.StructField("propn_key", T.StringType()),
     T.StructField("lemma_set_key", T.StringType()),
+    # node rows: document-local canonical id; l3 rows: the source's
+    T.StructField("canon_id", T.StringType()),
     T.StructField("src", T.StringType()),
     T.StructField("dst", T.StringType()),
     T.StructField("label", T.StringType()),
     T.StructField("attrs", T.MapType(T.StringType(), T.StringType())),
     T.StructField("emit_seq", T.IntegerType()),
+    T.StructField("subject", T.StringType()),
+    T.StructField("object", T.StringType()),
     T.StructField("src_kg_id", T.StringType()),
     T.StructField("target_node_id", T.StringType()),
     T.StructField("target_url", T.StringType()),
@@ -78,22 +90,36 @@ GRAPH_ROWS = T.StructType([
 _COLS = [f.name for f in GRAPH_ROWS.fields]
 
 
+def node_display() -> F.Column:
+    """Display string of a document node from its ``node_type``/``number``/
+    ``title`` columns, matching ``ImmutableNodeView.__str__``
+    (node.py:134-135); the twin of ``kgbuild.node_display``."""
+    return F.concat(
+        F.col("node_type"), F.lit(" "),
+        F.coalesce(F.col("number").cast("string"), F.lit("None")),
+        F.when(F.col("title").isNotNull() & (F.col("title") != ""),
+               F.concat(F.lit(": "), F.col("title"))).otherwise(F.lit("")))
+
+
 def extract_graph(nodes: DataFrame, resolved: DataFrame,
                   include_extensions: bool = False) -> DataFrame:
-    """nodes + resolved mentions -> wide graph rows.
+    """nodes + resolved mentions -> wide graph rows, each document's graph
+    final up to cross-document L3 merges (``kgbuild.document_graph``).
 
-    Grouped per url (``applyInPandas``) because the reference analyzes the
-    whole document's concatenated text at once — sentences and coreference
-    span node boundaries (``nlp_doc``, kg_renderer.py:129-181).  One shuffle
-    on url; group size is bounded by a single page's node count.
+    Per url because the reference analyzes the whole document's
+    concatenated text at once — sentences and coreference span node
+    boundaries (``nlp_doc``, kg_renderer.py:129-181).  One shuffle on url;
+    group size is bounded by a single page's node count.
     """
     targets = (resolved
                .groupBy("url", "node_id")
                .agg(F.collect_list(F.struct("mention_idx", "qual_idx",
                                             "start", "text",
-                                            "target_node_id", "target_url"))
+                                            "target_node_id", "target_url",
+                                            "target_display"))
                     .alias("mention_targets")))
-    src = (nodes.select("url", "node_id", "seq", "content", "para_key")
+    src = (nodes.select("url", "node_id", "seq", "content", "para_key",
+                        "parent_id", "path")
            .join(targets, ["url", "node_id"], "left"))
 
     # mapInPandas over url-partitioned, (url, seq)-sorted batches instead
@@ -116,39 +142,29 @@ def extract_graph(nodes: DataFrame, resolved: DataFrame,
             nonlocal node_rows, mentions_by_node
             if cur_url is None or not node_rows:
                 return
-            rows = render_document(cur_url, node_rows, mentions_by_node,
-                                   include_extensions)
-            for r in rows["kg_nodes"]:
-                out.append({**blank, "row_kind": "node", **r})
-            for r in rows["kg_edges"]:
-                out.append({**blank, "row_kind": "edge", **r})
-            for r in rows["l3"]:
-                out.append({**blank, "row_kind": "l3", **r})
+            rows = document_graph(cur_url, node_rows, mentions_by_node,
+                                  include_extensions)
+            for kind, key in (("node", "kg_nodes"), ("edge", "edges"),
+                              ("l3", "l3")):
+                out.extend({**blank, "row_kind": kind, **r}
+                           for r in rows[key])
             node_rows = []
             mentions_by_node = {}
 
         for pdf in batches:
-            for url, node_id, content, para_key, tgt in zip(
+            for url, node_id, content, para_key, parent_id, path, tgt in zip(
                     pdf["url"], pdf["node_id"], pdf["content"],
-                    pdf["para_key"], pdf["mention_targets"]):
+                    pdf["para_key"], pdf["parent_id"], pdf["path"],
+                    pdf["mention_targets"]):
                 if url != cur_url:
                     flush()
                     cur_url = url
                 node_rows.append({"node_id": node_id, "content": content,
-                                  "para_key": para_key})
-                mentions = detect(content or "")
-                if not mentions:
-                    continue
-                tmap = {}
-                if tgt is not None and len(tgt):
-                    for t in sorted(tgt, key=lambda x: (x["mention_idx"],
-                                                        x["qual_idx"])):
-                        tmap.setdefault((t["start"], t["text"]), []).append(
-                            {"node_id": t["target_node_id"],
-                             "url": t["target_url"]})
-                for m in mentions:
-                    m["targets"] = tmap.get((m["start"], m["text"]), [])
-                mentions_by_node[node_id] = mentions
+                                  "para_key": para_key,
+                                  "parent_id": parent_id, "path": path})
+                mentions = node_mentions(content, tgt)
+                if mentions:
+                    mentions_by_node[node_id] = mentions
             if len(out) >= 20000:
                 yield pd.DataFrame(out, columns=_COLS, dtype=object)
                 out = []
@@ -167,222 +183,72 @@ def graph_nodes(wide: DataFrame) -> DataFrame:
 
 
 def graph_edges(wide: DataFrame) -> DataFrame:
+    """Per-document final edges, with their ``emit_seq`` and endpoint
+    display strings."""
     return wide.filter(F.col("row_kind") == "edge").select(
-        "url", "src", "dst", "label", "attrs", "emit_seq")
+        "url", "src", "dst", "label", "attrs", "emit_seq", "subject",
+        "object")
 
 
 def l3_candidates(wide: DataFrame) -> DataFrame:
+    """The L3 candidates whose target is in another document, with their
+    source's local canonical id."""
     return wide.filter(F.col("row_kind") == "l3").select(
-        "url", "src_kg_id", "lemma_set_key", "target_node_id", "target_url")
-
-
-def contains_edges(nodes: DataFrame) -> DataFrame:
-    """Document-structure ``contains`` edges straight from the nodes table
-    (kg_renderer.py:49-54)."""
-    return (nodes.filter(F.col("parent_id").isNotNull())
-            .select("url", F.col("parent_id").alias("src"),
-                    F.col("node_id").alias("dst"),
-                    F.lit("contains").alias("label"),
-                    F.create_map().cast("map<string,string>").alias("attrs"),
-                    F.lit(-1).alias("emit_seq")))
+        "url", "src_kg_id", "canon_id", "lemma_set_key", "target_node_id",
+        "target_url")
 
 
 def doc_node_display(nodes: DataFrame) -> DataFrame:
     """Display strings for document nodes, matching
     ``ImmutableNodeView.__str__`` (node.py:134-135)."""
-    disp = F.concat(
-        F.col("node_type"), F.lit(" "),
-        F.coalesce(F.col("number").cast("string"), F.lit("None")),
-        F.when(F.col("title").isNotNull() & (F.col("title") != ""),
-               F.concat(F.lit(": "), F.col("title"))).otherwise(F.lit("")))
     return nodes.select("url", F.col("node_id").alias("kg_id"),
-                        disp.alias("display"))
+                        node_display().alias("display"))
 
 
 def entity_link_pairs(kg_nodes: DataFrame, l3: DataFrame,
-                      nodes: DataFrame,
-                      l3_broadcast_cutoff: int = 200_000,
-                      l3_hits_cutoff: int = 1_000_000) -> DataFrame:
-    """Merge pairs from all four linkers as (url, a, b) edge rows.
+                      nodes: DataFrame) -> DataFrame:
+    """Cross-document L3 merge pairs over local canonical ids: ``(url, a,
+    b, b_url)``, ``a`` the candidate's source and ``b`` a kg node of the
+    target document ``b_url`` with the same lemma set under the target's
+    path (reference_linker.py:62-89; subtree test = path prefix).
+    ``kg_nodes`` carries ``canon_id``, the node's document-local
+    canonical id.
 
-    Every group becomes a star to its min member — equivalent input to
-    connected components as the reference's pairwise reduce
-    (knowledge_graph.py:193-217).
+    The candidate set is one row per cross-document ReferenceLinker hit,
+    so it drives broadcast hash joins: ``nodes`` and the kg nodes are only
+    scanned, never shuffled, and every join output stays candidate-sized.
     """
-
-    # L1/L2/L4 fused into ONE star over a composite blocking key: each
-    # kg node contributes one row per applicable linker, tagged
-    # '<linker>\x1f<key fields>', then a single groupBy-min + join-back
-    # stars every group to its min member.  Per-group semantics are
-    # identical to running the three linkers separately; the fused form
-    # replaces three agg exchanges + three join probes of KB-scale data
-    # with one of each — the graph tail is fixed-latency-bound, so stage
-    # COUNT (not data volume) is what the scaling efficiency pays for.
-    # groupBy-min + join back instead of min-over-window: the window form
-    # puts an entire hot blocking key (Zipfian tokens at web scale) into
-    # ONE task, while the aggregate is map-side combined and the join
-    # back is an equi-join AQE can skew-split.  Null key fields are
-    # encoded as \x00 so null==null grouping (the window semantics) holds
-    # bit-for-bit.
-    def key_expr(tag: str, cols) -> F.Column:
-        parts = [F.lit(tag)] + [
-            F.coalesce(F.col(c), F.lit("\x00")) for c in cols]
-        return F.concat_ws("\x1f", *parts)
-
-    # One scan of the kg-node table, not three: each node emits an array
-    # of its applicable linker keys (L1 always; L2 for PhraseObjects in a
-    # paragraph; L4 for proper nouns), compacted and exploded.  The union
-    # form evaluated the (wide-checkpoint scan + filter + key concat)
-    # subtree once per linker; codegen evaluates this in a single pass.
-    #   L1: same token object (same_token_linker.py:9-18) — predicates
-    #       and objects both carry tokens
-    #   L2: same coref-resolved (lemma, tag) within the same Paragraph,
-    #       PhraseObjects only (same_lemma_in_same_paragraph_linker.py:21-54)
-    #   L4: proper nouns by (text, compound-children) surface, per
-    #       document (proper_noun_linker.py:12-26)
-    key_array = F.array_compact(F.array(
-        key_expr("L1", ["token_key"]),
-        F.when((F.col("kind") == "object")
-               & F.col("para_key").isNotNull(),
-               key_expr("L2", ["para_key", "coref_lemma", "coref_tag"])),
-        F.when(F.col("propn_key").isNotNull(),
-               key_expr("L4", ["url", "propn_key"]))))
-    # the member list feeds BOTH the min aggregate and the join-back
-    # probe; materialize it once or each side re-evaluates the explode
-    # over the kg-node table (measured 5.5s -> 3.4s for the fused star at
-    # 16 cores / 20k docs).  Skinny rows (two ids + key), so the
-    # checkpoint barrier is cheap at any scale.
-    _jobdesc("link: member list materialize")
-    members = (kg_nodes.select("url", "kg_id",
-                               F.explode(key_array).alias("k"))
-               .localCheckpoint(eager=True))
-    mins = members.groupBy("k").agg(F.min("kg_id").alias("a"))
-    fused = (members.join(mins, "k")
-             .filter(F.col("kg_id") != F.col("a"))
-             .select("url", "a", F.col("kg_id").alias("b")))
-
-    # L3: "<obj> VERB/ADJ ADP+ <ref>" — merge with same-lemma-set kg nodes
-    # under the reference target's subtree (reference_linker.py:62-89);
-    # subtree test = path-prefix over materialized paths.
-    #
-    # ADAPTIVE PLAN.  The candidate set is one row per ReferenceLinker
-    # pattern hit — orders of magnitude smaller than the corpus (zero on
-    # corpora without inclusion-reference syntax).  The join INPUTS are
-    # corpus-scale, though: attaching owner paths means kg_nodes ⋈ nodes
-    # (4.5M × 3.5M rows with fat path arrays at 80k docs) plus a full
-    # nodes shuffle for target paths — and because AQE submits all leaf
-    # query stages of a join tree concurrently, those exchanges run to
-    # completion BEFORE the runtime can observe that the candidate side
-    # is tiny or empty.  Measured: 65 s of the 67 s link stage at
-    # 16 cores / 80k docs, I/O-bound (1.16× core scaling) — the single
-    # largest input-size-coupled term in the pipeline's scaling tail.
-    # So materialize the candidates first and pick the plan by their
-    # actual size:
-    #   0 rows    -> no L3 pairs; skip the join machinery entirely;
-    #   <= cutoff -> drive BROADCAST hash joins off the candidates:
-    #                corpus-scale tables are only ever SCANNED (their
-    #                checkpointed blocks; no exchange), every join
-    #                output stays candidate-sized;
-    #   >  cutoff -> the original shuffle plan (a corpus where reference
-    #                syntax is dense enough that the candidate set is
-    #                itself corpus-scale deserves honest shuffles).
-    _jobdesc("link: L3 candidates materialize")
-    l3r = (l3.select(F.col("url").alias("l3_url"), "src_kg_id",
-                     F.col("lemma_set_key").alias("l3_lemma_set_key"),
-                     "target_node_id", "target_url")
-           .localCheckpoint(eager=True))
-    n_l3 = l3r.count()
-    if n_l3 == 0:
-        return fused.distinct()
-    if n_l3 <= l3_broadcast_cutoff:
-        # 1. attach the target's path: scan nodes against broadcast hash
-        cand = (nodes.select(F.col("node_id").alias("target_node_id"),
-                             F.col("path").alias("t_path"))
-                .join(F.broadcast(l3r), "target_node_id", "inner"))
-        # 2. same-url same-lemma-set kg nodes: scan kg_nodes against the
-        #    (still candidate-sized) broadcast
-        _jobdesc("link: L3 hits scan")
-        hits = (kg_nodes
-                .join(F.broadcast(cand),
-                      (F.col("url") == F.col("target_url"))
-                      & (F.col("lemma_set_key")
-                         == F.col("l3_lemma_set_key"))
-                      & (F.col("kg_id") != F.col("src_kg_id")),
-                      "inner")
-                .select("l3_url", "src_kg_id",
-                        F.col("kg_id").alias("kn_kg_id"),
-                        F.col("node_id").alias("owner_node_id"),
-                        F.col("url").alias("owner_url"), "t_path")
-                .localCheckpoint(eager=True))
-        # 3. attach the matched node's own path for the subtree test.
-        #    `hits` can exceed candidate size (candidates × same-lemma
-        #    nodes per url); guard the broadcast with its measured count
-        #    and fall back to a plain equi-join (shuffle of `hits` +
-        #    one nodes shuffle) past the cap.
-        owner = nodes.select(F.col("node_id").alias("owner_node_id"),
-                             F.col("url").alias("owner_url"),
-                             F.col("path").alias("owner_path"))
-        probe = (F.broadcast(hits) if hits.count() <= l3_hits_cutoff
-                 else hits)
-        l3p = (owner
-               .join(probe, ["owner_node_id", "owner_url"], "inner")
-               .filter(F.expr("slice(owner_path, 1, size(t_path))")
-                       == F.col("t_path"))
-               .select(F.col("l3_url").alias("url"),
-                       F.col("src_kg_id").alias("a"),
-                       F.col("kn_kg_id").alias("b")))
-        return fused.unionByName(l3p).distinct()
-
-    owner_paths = nodes.select(F.col("node_id").alias("owner_node_id"),
-                               F.col("url").alias("owner_url"),
-                               F.col("path").alias("owner_path"))
-    target_paths = nodes.select(F.col("node_id").alias("target_node_id"),
-                                F.col("path").alias("t_path"))
-    kn = (kg_nodes
-          .join(owner_paths,
-                (F.col("node_id") == F.col("owner_node_id"))
-                & (F.col("url") == F.col("owner_url")), "inner")
-          .select(F.col("url").alias("kn_url"),
-                  F.col("kg_id").alias("kn_kg_id"),
-                  F.col("lemma_set_key").alias("kn_lemma_set_key"),
-                  "owner_path"))
-    l3p = (l3r
-           .join(target_paths, "target_node_id", "inner")
-           .join(kn,
-                 (F.col("kn_url") == F.col("target_url"))
-                 & (F.col("kn_lemma_set_key") == F.col("l3_lemma_set_key"))
-                 & (F.col("kn_kg_id") != F.col("src_kg_id"))
-                 & (F.expr("slice(owner_path, 1, size(t_path))")
-                    == F.col("t_path")),
-                 "inner")
-           .select(F.col("l3_url").alias("url"),
-                   F.col("src_kg_id").alias("a"),
-                   F.col("kn_kg_id").alias("b")))
-
-    return fused.unionByName(l3p).distinct()
+    cand = (nodes.select(F.col("node_id").alias("target_node_id"),
+                         F.col("path").alias("t_path"))
+            .join(F.broadcast(l3.select(
+                F.col("url").alias("l3_url"),
+                "src_kg_id", F.coalesce("canon_id", "src_kg_id").alias("a"),
+                F.col("lemma_set_key").alias("l3_lemma_set_key"),
+                "target_node_id", "target_url")), "target_node_id"))
+    hits = (kg_nodes.select("url", "kg_id", "node_id", "lemma_set_key",
+                            "canon_id")
+            .join(F.broadcast(cand),
+                  (F.col("url") == F.col("target_url"))
+                  & (F.col("lemma_set_key") == F.col("l3_lemma_set_key"))
+                  & (F.col("kg_id") != F.col("src_kg_id")))
+            .select("l3_url", "a",
+                    F.coalesce("canon_id", "kg_id").alias("b"),
+                    F.col("node_id").alias("owner_node_id"),
+                    F.col("url").alias("owner_url"), "t_path"))
+    owner = nodes.select(F.col("node_id").alias("owner_node_id"),
+                         F.col("url").alias("owner_url"),
+                         F.col("path").alias("owner_path"))
+    return (owner
+            .join(F.broadcast(hits), ["owner_node_id", "owner_url"])
+            .filter(F.expr("slice(owner_path, 1, size(t_path))")
+                    == F.col("t_path"))
+            .select(F.col("l3_url").alias("url"), "a", "b",
+                    F.col("owner_url").alias("b_url")))
 
 
 #: Pair lists of at most this many rows are labelled on the driver (one
 #: fetch + union-find); larger ones take the distributed loop.
 DRIVER_CUTOFF = 200_000
-
-
-def _union_find(pairs: Iterable) -> dict:
-    """``{id: min id of its component}`` for every id in ``pairs``."""
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for x in parent}
 
 
 def _driver_labels(pairs: DataFrame):
@@ -401,7 +267,7 @@ def _driver_labels(pairs: DataFrame):
     probe = pairs.select("a", "b").limit(DRIVER_CUTOFF + 1).toPandas()
     if len(probe) > DRIVER_CUTOFF:
         return None
-    labels = _union_find(zip(probe["a"].tolist(), probe["b"].tolist()))
+    labels = union_find(zip(probe["a"].tolist(), probe["b"].tolist()))
     id_type = dict(pairs.dtypes)["a"]
     out = pairs.sparkSession.createDataFrame(
         pd.DataFrame({"id": list(labels), "canon_id": list(labels.values())},
@@ -465,205 +331,68 @@ def pair_components(pairs: DataFrame) -> DataFrame:
     return _min_label_loop(pairs) if labels is None else labels
 
 
-def _local_contraction(batches):
-    """mapInPandas kernel: union-find over all pairs in the partition,
-    emitting (kg_id, root=min id of its component) for non-root members.
-    Pairs are colocated by document-id prefix, so every same-document
-    component is complete within one partition; unrelated documents
-    sharing a partition cannot interact (disjoint id spaces)."""
-    labels = _union_find(
-        pair for pdf in batches
-        for pair in zip(pdf["a"].tolist(), pdf["b"].tolist()))
-    members = {x: r for x, r in labels.items() if x != r}
-    yield pd.DataFrame({"kg_id": list(members),
-                        "root": list(members.values())}, dtype=object)
-
-
 def connected_components(pairs: DataFrame) -> DataFrame:
     """Merge-pair graph -> (kg_id, canon_id), canonical = min id per
     component (the deterministic replacement for the reference's
     ``set.pop()`` winner, knowledge_graph.py:193-217).  Ids in no pair are
-    absent and keep their own id.
-
-    While the pair list fits under ``DRIVER_CUTOFF`` (every recorded
-    workload below 320k docs) it is labelled on the driver in three jobs:
-    pair checkpoint, probe+fetch, labels publish.  Past it, two phases
-    matching the edge structure the linkers produce:
-
-    1. **local contraction** — L1/L2/L4 (and most L3) pairs stay within
-       one document; a single union-find pass over document-prefix-
-       partitioned pairs resolves them in one shuffle with no iteration;
-    2. **quotient** — only cross-document L3 pairs survive, mapped through
-       their local roots, and ``pair_components`` labels that (small)
-       graph.
-
-    Output is identical to labelling the full graph: min of component ==
-    min over (local mins, quotient min).
+    absent and keep their own id.  The KG's pairs are the cross-document
+    quotient over local canonical ids, so the labels compose with the
+    per-document ones: min of a component == min over its local minima.
     """
-    spark = pairs.sparkSession
-    # materialize the pair list before multiple branches reference it
-    # (concurrent branches would run the linker plan twice).  This
-    # evaluates the LINKER JOIN PLAN, so it runs under the caller's AQE
-    # setting (coalescing/skew-split apply); only the fixed-latency
-    # distributed phases below turn AQE off.
-    _jobdesc("cc: pairs materialize (linker join plan)")
-    pairs = pairs.localCheckpoint(eager=True)
     labels = _driver_labels(pairs)
-    if labels is not None:
-        # bounded by the cutoff by construction: hint broadcast so the
-        # apply_merges/make_triples joins skip the shuffle AND the AQE
-        # size-estimation replan round (the triples join tail is
-        # fixed-latency-bound).  The distributed path below returns no
-        # hint — its canon is corpus-sized.
-        return labels.withColumnRenamed("id", "kg_id").hint("broadcast")
-
-    # the merge graph is tiny relative to the corpus (a few pairs per
-    # page); run the distributed phases without AQE re-planning so each
-    # is one cheap job.
-    # NB: spark.conf is session-global — concurrent queries on the same
-    # SparkSession would run without AQE meanwhile.  The pipeline runs its
-    # stages sequentially so this is safe here; callers sharing a session
-    # with unrelated concurrent jobs should run CC on a dedicated session
-    # (``SparkSession.newSession()`` shares the JVM but isolates conf).
-    # The previous value is restored on exit; if it was unset we restore
-    # the documented Spark default ("true").
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        # phase 1: kg ids are "<sha(url)[:12]>:<kind><n>" — a pair is
-        # document-local iff the prefixes match
-        doc_local = F.substring("a", 1, 12) == F.substring("b", 1, 12)
-        nparts = max(spark.sparkContext.defaultParallelism, 8)
-        _jobdesc("cc: local contraction")
-        local_map = (pairs.filter(doc_local)
-                     .repartition(nparts, F.substring("a", 1, 12))
-                     .mapInPandas(_local_contraction,
-                                  "kg_id string, root string")
-                     .localCheckpoint(eager=True))
-
-        # phase 2: cross-document pairs re-expressed over local roots
-        la = local_map.select(F.col("kg_id").alias("a"),
-                              F.col("root").alias("ra"))
-        lb = local_map.select(F.col("kg_id").alias("b"),
-                              F.col("root").alias("rb"))
-        quotient = (pairs.filter(~doc_local)
-                    .join(la, "a", "left").join(lb, "b", "left")
-                    .select(F.coalesce("ra", "a").alias("a"),
-                            F.coalesce("rb", "b").alias("b"))
-                    .filter(F.col("a") != F.col("b")))
-        labels = pair_components(quotient)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-
-    # compose: canon(id) = quotient_label(local_root(id)), defaulting to
-    # the local root / the id itself at each level
-    q = labels.select(F.col("id").alias("root"),
-                      F.col("canon_id").alias("qlabel"))
-    composed_members = (local_map.join(q, "root", "left")
-                        .select("kg_id",
-                                F.coalesce("qlabel", "root")
-                                .alias("canon_id")))
-    root_rows = labels.withColumnRenamed("id", "kg_id")
-    return (composed_members.unionByName(root_rows)
-            .groupBy("kg_id").agg(F.min("canon_id").alias("canon_id")))
+    if labels is None:
+        return _min_label_loop(pairs).withColumnRenamed("id", "kg_id")
+    # bounded by the cutoff by construction: hint broadcast so the
+    # apply_merges/make_triples joins skip the shuffle
+    return labels.withColumnRenamed("id", "kg_id").hint("broadcast")
 
 
 def apply_merges(kg_nodes: DataFrame, kg_edges: DataFrame,
-                 canon: DataFrame,
-                 dup_broadcast_cutoff: int = 2_000_000) -> DataFrame:
+                 canon: DataFrame) -> DataFrame:
     """Canonical-id rewrite of edges + reference dedup semantics: self-loop
-    edges dropped (knowledge_graph.py:93), one edge per (u, v) with the last
-    write winning (add_edge overwrite, knowledge_graph.py:23-43).
-
-    Last-write-wins without ever shuffling the fat rows: ~87% of
-    (url, src, dst) keys are unique after the rewrite, so a skinny
-    duplicate-key census (HashAggregate over the three key columns)
-    splits the edge set — singleton-key rows pass through UNSHUFFLED
-    via a broadcast anti-join, only the duplicate-key minority rides
-    the row_number window.  The map-typed ``attrs`` column (the fat
-    payload) therefore crosses no exchange for the common case.
-    Measured 6.8s -> ~2s at 16 cores / 2.4M edges vs the full-table
-    window; falls back to the full window when the duplicate-key list
-    exceeds ``dup_broadcast_cutoff`` (a web-scale corpus with that many
-    duplicate keys is better served by one honest shuffle — at which
-    point edges should arrive url-partitioned and the url-local window
-    needs no exchange at all).  A max_by aggregate instead of the
-    window is worse in both regimes: its buffer carries ``attrs``,
-    which disqualifies HashAggregate and plans as a double
-    SortAggregate.
-    """
+    edges dropped (knowledge_graph.py:93), one edge per (url, src, dst)
+    with the last write (highest ``emit_seq``) winning (add_edge
+    overwrite, knowledge_graph.py:23-43).  Keeps every other column of
+    ``kg_edges`` but ``emit_seq``.  ``graph_tail`` calls it on the
+    documents a cross-document merge touches only."""
     csrc = canon.select(F.col("kg_id").alias("src"),
                         F.col("canon_id").alias("csrc"))
     cdst = canon.select(F.col("kg_id").alias("dst"),
                         F.col("canon_id").alias("cdst"))
-    _jobdesc("merge: canon-rewritten edges materialize")
     rewritten = (kg_edges
                  .join(csrc, "src", "left")
                  .join(cdst, "dst", "left")
-                 .select("url",
-                         F.coalesce("csrc", "src").alias("src"),
-                         F.coalesce("cdst", "dst").alias("dst"),
-                         "label", "attrs", "emit_seq")
-                 .filter(F.col("src") != F.col("dst"))
-                 # THREE consumers scan this (dup census, singleton
-                 # anti-join, winner semi-join+window); without the
-                 # barrier each re-evaluates the edge-scale canon-rewrite
-                 # join — measured as the largest slice of the 16-core
-                 # fixed tail (~12 s of re-evaluation at 80k docs)
-                 .localCheckpoint(eager=True))
-    key = ["url", "src", "dst"]
-    _jobdesc("merge: dup-key census")
-    dup_keys = (rewritten.groupBy(*key)
-                .agg(F.count("*").alias("n"))
-                .filter(F.col("n") > 1)
-                .select(*key)
-                .localCheckpoint(eager=True))
-    n_dup = dup_keys.count()
-    w = Window.partitionBy(*key).orderBy(F.desc("emit_seq"))
-    if n_dup > dup_broadcast_cutoff:
-        return (rewritten.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .drop("rn", "emit_seq"))
-    dup_keys = F.broadcast(dup_keys)
-    singles = rewritten.join(dup_keys, key, "left_anti").drop("emit_seq")
-    winners = (rewritten.join(dup_keys, key, "left_semi")
-               .withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") == 1)
-               .drop("rn", "emit_seq"))
-    return singles.unionByName(winners)
+                 .withColumn("src", F.coalesce("csrc", "src"))
+                 .withColumn("dst", F.coalesce("cdst", "dst"))
+                 .filter(F.col("src") != F.col("dst")))
+    w = Window.partitionBy("url", "src", "dst").orderBy(F.desc("emit_seq"))
+    return (rewritten.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(*[c for c in kg_edges.columns if c != "emit_seq"]))
 
 
 def make_triples(final_edges: DataFrame, kg_nodes: DataFrame,
-                 canon: DataFrame, nodes: DataFrame,
-                 structural: bool = False) -> DataFrame:
+                 canon=None) -> DataFrame:
     """Edges -> string triples with the reference's formatting
     (``as_triplets``, knowledge_graph.py:122-138: token text for
     predicate/object nodes, immutable-view string for document nodes) and
     the E4 comparator's exclusion of defines/contains edges
-    (evaluate_kg_creation.py:25)."""
-    canon_nodes = (kg_nodes
-                   .join(canon, "kg_id", "left")
-                   .withColumn("cid", F.coalesce("canon_id", "kg_id"))
-                   .filter(F.col("cid") == F.col("kg_id"))
-                   .select(F.col("kg_id"),
-                           F.col("token_text").alias("display")))
-    _jobdesc("triples: display map materialize")
-    # the src and dst joins below each scan this map; without the barrier
-    # the (kg_nodes ⋈ canon) ∪ doc-display subtree evaluates twice —
-    # Spark has no cross-join common-subexpression reuse.  Skinny rows
-    # (id, short display string), node-scale.
-    display = canon_nodes.unionByName(
-        doc_node_display(nodes).select("kg_id", "display")) \
-        .localCheckpoint(eager=True)
-    _jobdesc("triples: edge-display joins")
-
-    e = final_edges if structural else final_edges.filter(
-        ~F.col("label").isin("defines", "contains"))
-    return (e
-            .join(display.withColumnRenamed("kg_id", "src"), "src")
-            .withColumnRenamed("display", "subject")
-            .join(display.withColumnRenamed("kg_id", "dst"), "dst")
-            .withColumnRenamed("display", "object")
+    (evaluate_kg_creation.py:25).  Edges carry their endpoints' display
+    strings from the per-document pass; with ``canon`` (cross-document
+    labels) an endpoint that is a canonical id takes that node's token
+    text, which may come from another document."""
+    e = final_edges.filter(~F.col("label").isin("defines", "contains"))
+    if canon is not None:
+        disp = (kg_nodes
+                .join(canon.filter(F.col("kg_id") == F.col("canon_id"))
+                      .select("kg_id"), "kg_id")
+                .select("kg_id", F.col("token_text").alias("display")))
+        for end, col in (("src", "subject"), ("dst", "object")):
+            e = (e.join(disp.withColumnRenamed("kg_id", end), end, "left")
+                 .withColumn(col, F.coalesce("display", col))
+                 .drop("display"))
+    return (e.filter(F.col("subject").isNotNull()
+                     & F.col("object").isNotNull())
             .select("url", "subject", F.col("label").alias("relation"),
                     "object"))
 
@@ -671,15 +400,10 @@ def make_triples(final_edges: DataFrame, kg_nodes: DataFrame,
 def build_graph(nodes: DataFrame, resolved: DataFrame,
                 include_extensions: bool = False):
     """Convenience wrapper: returns (kg_nodes, final_edges, canon, triples)."""
-    # materialize the UDF stage once before the plan fans out — the linker
-    # pair sets and the CC edge union each reference `wide` several times,
-    # and concurrent first-use branches would race an unfilled cache and
-    # re-run the (expensive) annotate/extract subtree per branch.
-    # localCheckpoint (not cache) also TRUNCATES the lineage, so the ~10
-    # downstream driver actions (checkpoint rounds, CC counts, final
-    # triples) re-plan a one-node scan instead of the whole pipeline —
-    # driver planning was a measurable slice of the core-count-independent
-    # cost that caps scaling efficiency
+    # materialize the UDF stage once before the tail reads it several
+    # times (kg nodes, edges, candidates); localCheckpoint (not cache)
+    # also TRUNCATES the lineage, so the tail's actions re-plan a
+    # one-node scan instead of the whole pipeline
     _jobdesc("extract: wide materialize (annotate/extract UDF)")
     wide = extract_graph(nodes, resolved,
                          include_extensions).localCheckpoint(eager=True)
@@ -687,26 +411,51 @@ def build_graph(nodes: DataFrame, resolved: DataFrame,
 
 
 def graph_tail(wide: DataFrame, nodes: DataFrame):
-    """link -> cc -> merge -> triples over materialized graph rows; returns
+    """Cross-document step over materialized graph rows; returns
     (kg_nodes, final_edges, canon, triples).  Shared by ``build_graph``
     and the checkpointed plan, whose ``wide`` is a committed table."""
-    _jobdesc("link+cc+triples tail")
     kn = graph_nodes(wide)
-    ke = graph_edges(wide).unionByName(contains_edges(nodes))
-    pairs = entity_link_pairs(kn, l3_candidates(wide), nodes)
-    canon = connected_components(pairs)
-    final_edges = apply_merges(kn, ke, canon)
-    triples = make_triples(final_edges, kn, canon, nodes)
-    return kn, final_edges, canon, triples
+    local = wide.filter(F.col("row_kind") == "node")
+    edges = graph_edges(wide)
+    l3 = l3_candidates(wide)
+    _jobdesc("link: cross-document L3 candidates probe")
+    if l3.isEmpty():
+        canon = local.filter(F.col("canon_id").isNotNull()).select(
+            "kg_id", "canon_id")
+        triples = make_triples(edges, kn)
+        return kn, edges.drop("emit_seq", "subject", "object"), canon, \
+            triples
+
+    _jobdesc("link: cross-document L3 pairs")
+    pairs = entity_link_pairs(local, l3, nodes).localCheckpoint(eager=True)
+    labels = connected_components(pairs)
+    touched = F.broadcast(pairs.select("url").union(
+        pairs.select(F.col("b_url").alias("url"))))
+    final = (edges.join(touched, "url", "left_anti").drop("emit_seq")
+             .unionByName(apply_merges(kn, edges.join(touched, "url",
+                                                      "left_semi"),
+                                       labels)))
+    triples = make_triples(final, kn, labels)
+    # ids in a local or a cross-document pair -> global canonical id
+    canon = (local.select("kg_id", "canon_id",
+                          F.coalesce("canon_id", "kg_id").alias("root"))
+             .join(labels.select(F.col("kg_id").alias("root"),
+                                 F.col("canon_id").alias("label")),
+                   "root", "left")
+             .filter(F.col("canon_id").isNotNull()
+                     | F.col("label").isNotNull())
+             .select("kg_id",
+                     F.coalesce("label", "root").alias("canon_id")))
+    return kn, final.drop("subject", "object"), canon, triples
 
 
 def global_entities(kg_nodes: DataFrame) -> DataFrame:
     """Cross-document entity canonicalization.
 
-    The reference's four linkers (and therefore ``entity_link_pairs``)
-    stop at document scope — correct for its single-document thesis
-    corpus, but at web scale the same real-world entity surfaces on
-    millions of pages.  This operator blocks on the normalized
+    The reference's four linkers stop at document scope (only an L3
+    reference reaches into the cited document) — correct for its
+    single-document thesis corpus, but at web scale the same real-world
+    entity surfaces on millions of pages.  This operator blocks on the normalized
     proper-noun surface form (``propn_key``: text + compound children,
     url-independent by construction) ACROSS urls and emits one row per
     global entity:

@@ -16,6 +16,10 @@ shared in-memory tree, we
    reference (``spacy_components.py:22-23``) — via ``row_number`` over
    ``(doc_rank, target_url, target_seq)``.
 
+A resolved row carries its target's display string (``kg.node_display``),
+so the per-document KG pass prints a target in another document without
+a join.
+
 Scale notes: the candidate join shuffles on ``(url, node_type, number)``;
 hot keys ("this Regulation" -> one Document row per url) stay bounded per
 url, and AQE skew-join splits anything residual.  The title dimension is one
@@ -26,7 +30,9 @@ normalized-title equi-join with the lenient pass as a small-side fallback.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from inclusionreferenceskg_spark.operators.kg import node_display
 
 
 #: JVM-side path-subsequence confirm.  Equivalent to
@@ -71,6 +77,7 @@ def resolve_targets(qualifiers: DataFrame, nodes: DataFrame) -> DataFrame:
         F.col("number").alias("cand_number"),
         F.col("seq").alias("target_seq"),
         F.col("path").alias("cand_path"),
+        node_display().alias("target_display"),
     )
 
     base_cols = ["url", "node_id", "seq", "mention_idx", "start", "text",
@@ -148,11 +155,12 @@ def resolve_targets(qualifiers: DataFrame, nodes: DataFrame) -> DataFrame:
     keys = ["url", "node_id", "seq", "mention_idx", "start", "text",
             "qual_idx"]
     target = F.struct("target_doc_rank", "target_url", "target_seq",
-                      "target_node_id").alias("t")
+                      "target_node_id", "target_display").alias("t")
     return (confirmed
             .select(*keys, target)
             .groupBy(*keys)
             .agg(F.min("t").alias("t"))
             .select(*keys, F.col("t.target_url").alias("target_url"),
                     F.col("t.target_node_id").alias("target_node_id"),
-                    F.col("t.target_seq").alias("target_seq")))
+                    F.col("t.target_seq").alias("target_seq"),
+                    F.col("t.target_display").alias("target_display")))

@@ -83,6 +83,7 @@ RESOLVED = T.StructType([
     T.StructField("target_url", T.StringType(), False),
     T.StructField("target_node_id", T.StringType(), False),
     T.StructField("target_seq", T.LongType(), False),
+    T.StructField("target_display", T.StringType(), False),
 ])
 
 KG_NODES = T.StructType([

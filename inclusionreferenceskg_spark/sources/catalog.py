@@ -169,20 +169,20 @@ class Catalog:
 
     def _build_manifest(self, name: str, out: DataFrame,
                         cols: Sequence[str], t0: float) -> dict:
-        if cols:
-            part_rows = [
-                {"partition": "/".join(f"{c}={r[c]}" for c in cols),
-                 "rows": r["rows"]}
-                for r in out.groupBy(*cols)
-                .agg(F.count("*").alias("rows")).collect()
-            ]
-        else:
-            part_rows = [{"partition": "", "rows": out.count()}]
+        # one scan: per-partition row counts and per-partition XOR of row
+        # hashes, folded on the driver (XOR is associative, so the fold
+        # equals one table-wide bit_xor; no rows -> None, as bit_xor)
         hashable = [c for c, t in out.dtypes if not t.startswith("map")]
-        checksum = out.agg(
+        groups = out.groupBy(*cols).agg(
+            F.count("*").alias("rows"),
             F.expr("bit_xor(xxhash64({}))".format(
-                ", ".join(f"`{c}`" for c in hashable)))
-            .alias("c")).first()["c"]
+                ", ".join(f"`{c}`" for c in hashable))).alias("c")).collect()
+        part_rows = [{"partition": "/".join(f"{c}={r[c]}" for c in cols),
+                      "rows": r["rows"]} for r in groups]
+        checksum = None
+        for r in groups:
+            if r["c"] is not None:
+                checksum = r["c"] if checksum is None else checksum ^ r["c"]
         return {
             "stage": name,
             "partitions": part_rows,

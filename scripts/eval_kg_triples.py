@@ -4,11 +4,12 @@ Replicates ``evaluate_kg_creation.py``: per-article graphs over GDPR
 Articles 29/30 (``create_graph(article, article)`` — note the reference
 resolves references against the *article itself*, so fully-qualified
 patterns never match and no edge rerouting happens in this evaluation),
-entity linking L1/L2/L4, batched merge, then set comparison of
+entity linking, batched merge, then set comparison of
 ``(subject, relation, object)`` strings excluding defines/contains.
 
-Pure-Python twin of the Spark operators for fast annotator iteration; the
-Spark path is exercised by tests/test_spark_kg.py on the synthetic corpus.
+Runs ``kgbuild.document_graph``, the function the Spark extract UDF calls
+per document, so it iterates on the annotator without Spark; the Spark
+path is exercised by tests/test_spark_kg.py on the synthetic corpus.
 """
 
 from __future__ import annotations
@@ -16,13 +17,12 @@ from __future__ import annotations
 import csv
 import os
 import sys
-from collections import defaultdict
 
 sys.path.insert(0, "/root/repo")
 
 from inclusionreferenceskg_spark.functions.doctree import parse_page
 from inclusionreferenceskg_spark.functions.grammar import detect
-from inclusionreferenceskg_spark.functions.kgbuild import render_document
+from inclusionreferenceskg_spark.functions.kgbuild import document_graph
 
 REF = "/root/reference/inclusionreferenceskg"
 
@@ -36,64 +36,18 @@ def article_subtree(rows, article_no):
     return out
 
 
-def build_graph_rows(sub_rows):
+def article_triples(rows, article_no):
+    """(subject, relation, object) of one article's graph: the Spark
+    UDF's per-document function over the article subtree, no targets."""
+    sub = article_subtree(rows, article_no)
     mentions_by_node = {}
-    for node in sub_rows:
+    for node in sub:
         ms = detect(node["content"] or "")
         for m in ms:
             m["targets"] = []
         mentions_by_node[node["node_id"]] = ms
-    out = render_document(sub_rows[0]["url"], sub_rows, mentions_by_node)
-    kg_nodes = {r["kg_id"]: r for r in out["kg_nodes"]}
-    return kg_nodes, out["kg_edges"]
-
-
-def link_and_merge(kg_nodes, edges, node_display):
-    groups = defaultdict(list)
-    for r in kg_nodes.values():
-        groups[("L1", r["token_key"])].append(r["kg_id"])
-        if r["kind"] == "object" and r["para_key"]:
-            groups[("L2", r["para_key"], r["coref_lemma"],
-                    r["coref_tag"])].append(r["kg_id"])
-        if r["propn_key"]:
-            groups[("L4", r["url"], r["propn_key"])].append(r["kg_id"])
-
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = min(ra, rb), max(ra, rb)
-            parent[hi] = lo
-
-    for members in groups.values():
-        for m in members[1:]:
-            union(members[0], m)
-
-    def canon(x):
-        return find(x) if x in parent else x
-
-    final = {}
-    for e in edges:
-        s, d = canon(e["src"]), canon(e["dst"])
-        if s == d:
-            continue
-        final[(s, d)] = e["label"]
-
-    def display(kg_id):
-        if kg_id in kg_nodes:
-            return kg_nodes[kg_id]["token_text"]
-        return node_display.get(kg_id, kg_id)
-
-    return {(display(s), lab, display(d)) for (s, d), lab in final.items()
-            if lab not in ("defines", "contains")}
+    out = document_graph(sub[0]["url"], sub, mentions_by_node)
+    return {t[1:] for t in out["triples"]}
 
 
 def evaluate(article_no, csv_name, verbose=True):
@@ -103,14 +57,7 @@ def evaluate(article_no, csv_name, verbose=True):
               encoding="utf-8") as f:
         text = f.read()
     rows = parse_page("eu://gdpr.txt", "GDPR", text)
-    node_display = {
-        r["node_id"]: f"{r['node_type']} {r['number']}"
-        + (f": {r['title']}" if r["title"] else "")
-        for r in rows
-    }
-    sub = article_subtree(rows, article_no)
-    kg_nodes, edges = build_graph_rows(sub)
-    actual = link_and_merge(kg_nodes, edges, node_display)
+    actual = article_triples(rows, article_no)
 
     with open(os.path.join(REF, "resources", "evaluation_data",
                            "kg_triplets", csv_name), encoding="utf-8") as f:

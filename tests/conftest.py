@@ -22,3 +22,34 @@ def sf_dir():
     if not os.path.isdir(d):
         pytest.skip(f"testdata dir {d} not available")
     return d
+
+
+@pytest.fixture(scope="session")
+def cross_doc_pages(spark):
+    """``make(edit_page1=True)`` -> the 8-page synthetic corpus (seed 42)
+    with a cross-document L3 sentence: page 0's Article 2 gains "the
+    records referred to in Article 2 of" page 1's title, and (optionally)
+    page 1's Article 2 gains a sentence about "the record".  Each edit is
+    a new paragraph 3, after the article's paragraph 2."""
+    from inclusionreferenceskg_spark import synth
+
+    edits = {
+        0: ("3. The controller shall keep the records referred to in "
+            f"Article 2 of {synth.doc_title(1)}."),
+        1: "3. The processor shall keep the record.",
+    }
+    base = [list(r) for r in synth.synthesize_pages(spark, 8, seed=42)
+            .collect()]
+
+    def make(edit_page1: bool = True):
+        rows = []
+        for r in base:
+            text, doc_id = r[3], r[6]
+            if doc_id == 0 or (doc_id == 1 and edit_page1):
+                marker = "\n\nArticle 3\n\n"
+                assert text.count(marker) == 1
+                text = text.replace(marker, f"\n\n{edits[doc_id]}{marker}")
+            rows.append(tuple(r[:3] + [text] + r[4:]))
+        return spark.createDataFrame(rows, synth.PAGES_SCHEMA)
+
+    return make

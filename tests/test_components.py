@@ -12,10 +12,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from inclusionreferenceskg_spark.functions.kgbuild import (
+    link_pairs,
+    path_key,
+    rewrite_edges,
+)
 from inclusionreferenceskg_spark.operators import kg
 from inclusionreferenceskg_spark.operators.kg import (
     apply_merges,
     connected_components,
+    entity_link_pairs,
 )
 
 
@@ -83,30 +89,35 @@ def test_duplicate_edges_keep_last_write(spark):
     assert final[0]["label"] == "agent"  # last write wins (add_edge overwrite)
 
 
-def test_duplicate_split_matches_full_window(spark):
-    """apply_merges' broadcast singleton/duplicate split must produce the
-    exact row set of the full-table window it replaces; cutoff=0 forces
-    the web-scale full-window path on the same input (mixed singleton and
-    duplicate keys, plus a self-loop that must drop on both paths)."""
+def test_document_dedup_matches_spark_window(spark):
+    """The per-document rewrite (``kgbuild.rewrite_edges``, run inside the
+    extract pass for every document) and apply_merges' window (run on the
+    documents a cross-document merge touches) must produce the same row
+    set on mixed singleton and duplicate keys, plus a self-loop that must
+    drop on both paths."""
+    rows_in = [("u://x", "a", "b", "patient", None, 0),
+               ("u://x", "a", "b", "agent", None, 7),
+               ("u://x", "a", "c", "loner", None, 1),
+               ("u://y", "a", "b", "other-url", None, 2),
+               ("u://x", "d", "d", "selfloop", None, 3),
+               ("u://x", "e", "f", "dup1", None, 4),
+               ("u://x", "e", "f", "dup2", None, 5)]
     edges = spark.createDataFrame(
-        [("u://x", "a", "b", "patient", None, 0),
-         ("u://x", "a", "b", "agent", None, 7),
-         ("u://x", "a", "c", "loner", None, 1),
-         ("u://y", "a", "b", "other-url", None, 2),
-         ("u://x", "d", "d", "selfloop", None, 3),
-         ("u://x", "e", "f", "dup1", None, 4),
-         ("u://x", "e", "f", "dup2", None, 5)],
+        rows_in,
         "url string, src string, dst string, label string, "
         "attrs map<string,string>, emit_seq int")
     canon = connected_components(_pairs(spark, []))
 
-    def rows(df):
-        return {(r["url"], r["src"], r["dst"], r["label"])
-                for r in df.collect()}
-
-    split = rows(apply_merges(None, edges, canon))
-    window = rows(apply_merges(None, edges, canon, dup_broadcast_cutoff=0))
-    assert split == window == {
+    window = {(r["url"], r["src"], r["dst"], r["label"])
+              for r in apply_merges(None, edges, canon).collect()}
+    by_url = {}
+    for url, src, dst, label, attrs, seq in rows_in:
+        by_url.setdefault(url, []).append(
+            {"url": url, "src": src, "dst": dst, "label": label,
+             "attrs": attrs, "emit_seq": seq})
+    local = {(e["url"], e["src"], e["dst"], e["label"])
+             for doc in by_url.values() for e in rewrite_edges(doc, {})}
+    assert local == window == {
         ("u://x", "a", "b", "agent"),
         ("u://x", "a", "c", "loner"),
         ("u://y", "a", "b", "other-url"),
@@ -169,9 +180,8 @@ def test_long_cross_document_chain(spark, monkeypatch):
 def test_mixed_local_and_cross_document_pairs(spark, monkeypatch):
     """Within-document chains joined by a long cross-document chain, plus
     a separate two-document component and unmerged ids.  Labelled on the
-    driver, through the local contraction with a driver-labelled quotient
-    (pair list over the cutoff, quotient under it), and fully distributed
-    — all three give the same map."""
+    driver, with a cutoff just under the pair count, and fully
+    distributed — all three give the same map."""
     merges = []
     for d in range(16):
         # a scrambled chain inside each document: o5-o2-o4-o1-o3
@@ -196,80 +206,84 @@ def test_mixed_local_and_cross_document_pairs(spark, monkeypatch):
     assert _canon_map(spark, merges, ids) == want
 
 
-def _l3_fixture(spark):
-    """Tiny corpus with a non-empty L3 candidate set: one reference from
-    src kg node s1 to document node n1, whose subtree (n1, n2, n3) holds
-    one same-lemma-set kg node (g1) plus decoys (wrong key, wrong url,
-    outside the subtree, the src itself)."""
+def _l3_fixture(spark, src_url="u1"):
+    """Tiny corpus with one L3 candidate: a reference from src kg node s1
+    (in document ``src_url``) to document node n1 of u1, whose subtree
+    (n1, n2, n3) holds one same-lemma-set kg node (g1) plus decoys (wrong
+    key, wrong url, outside the subtree, the src itself).  Returns the
+    Spark tables and u1's rows as the per-document pass sees them."""
     from pyspark.sql import types as T
 
     pe = T.StructType([T.StructField("node_type", T.StringType()),
                        T.StructField("number", T.IntegerType()),
                        T.StructField("title", T.StringType())])
+    node_rows = [("u1", "n1", [("Document", 1, "d")]),
+                 ("u1", "n2", [("Document", 1, "d"), ("Article", 1, None)]),
+                 ("u1", "n3", [("Document", 1, "d"), ("Article", 2, None)]),
+                 ("u1", "n4", [("Document", 2, "e")]),      # outside subtree
+                 ("u2", "m1", [("Document", 1, "d")])]
     nodes = spark.createDataFrame(
-        [("u1", "n1", [("Document", 1, "d")]),
-         ("u1", "n2", [("Document", 1, "d"), ("Article", 1, None)]),
-         ("u1", "n3", [("Document", 1, "d"), ("Article", 2, None)]),
-         ("u1", "n4", [("Document", 2, "e")]),          # outside subtree
-         ("u2", "m1", [("Document", 1, "d")])],
-        T.StructType([T.StructField("url", T.StringType()),
-                      T.StructField("node_id", T.StringType()),
-                      T.StructField("path", T.ArrayType(pe))]))
-    kg_cols = ("url string, node_id string, kg_id string, kind string, "
-               "token_key string, para_key string, coref_lemma string, "
-               "coref_tag string, propn_key string, lemma_set_key string")
+        node_rows, T.StructType([T.StructField("url", T.StringType()),
+                                 T.StructField("node_id", T.StringType()),
+                                 T.StructField("path", T.ArrayType(pe))]))
+    kg_cols = ["url", "node_id", "kg_id", "kind", "token_key", "para_key",
+               "coref_lemma", "coref_tag", "propn_key", "lemma_set_key",
+               "canon_id"]
+    kg_rows = [
+        ("u1", "n1", "s1", "object", "tk-s1", None, None, None, None, "k",
+         None),
+        ("u1", "n2", "g1", "object", "tk-g1", None, None, None, None, "k",
+         None),
+        ("u1", "n3", "g2", "object", "tk-g2", None, None, None, None, "x",
+         None),
+        ("u1", "n4", "g3", "object", "tk-g3", None, None, None, None, "k",
+         None),
+        ("u2", "m1", "g4", "object", "tk-g4", None, None, None, None, "k",
+         None)]
     kg_nodes = spark.createDataFrame(
-        [("u1", "n1", "s1", "object", "tk-s1", None, None, None, None, "k"),
-         ("u1", "n2", "g1", "object", "tk-g1", None, None, None, None, "k"),
-         ("u1", "n3", "g2", "object", "tk-g2", None, None, None, None, "x"),
-         ("u1", "n4", "g3", "object", "tk-g3", None, None, None, None, "k"),
-         ("u2", "m1", "g4", "object", "tk-g4", None, None, None, None, "k")],
-        kg_cols)
+        kg_rows, ", ".join(f"{c} string" for c in kg_cols))
+    cand = {"url": src_url, "src_kg_id": "s1", "canon_id": None,
+            "lemma_set_key": "k", "target_node_id": "n1",
+            "target_url": "u1"}
     l3 = spark.createDataFrame(
-        [("u1", "s1", "k", "n1", "u1")],
-        "url string, src_kg_id string, lemma_set_key string, "
-        "target_node_id string, target_url string")
-    return kg_nodes, l3, nodes
+        [tuple(cand.values())], ", ".join(f"{c} string" for c in cand))
+    doc = {"kg_nodes": [dict(zip(kg_cols, r)) for r in kg_rows
+                        if r[0] == "u1"],
+           "paths": {nid: path_key([dict(zip(("node_type", "number",
+                                               "title"), e)) for e in p])
+                     for url, nid, p in node_rows if url == "u1"}}
+    return kg_nodes, l3, nodes, cand, doc
 
 
-def test_l3_broadcast_plan_matches_shuffle_plan(spark):
-    """The adaptive L3 join (candidate-driven broadcast plan) must emit
-    the identical pair set as the corpus-shuffle fallback, on a corpus
-    where every decoy class is present."""
-    from inclusionreferenceskg_spark.operators.kg import entity_link_pairs
+#: L3 pairs the fixture's decoys must never produce
+_L3_DECOYS = [("s1", "g2"), ("s1", "g3"), ("s1", "g4"), ("s1", "s1")]
 
-    kg_nodes, l3, nodes = _l3_fixture(spark)
-    want_l3 = {("u1", "s1", "g1")}
 
-    def rows(df):
-        return {(r.url, r.a, r.b) for r in df.collect()}
-
-    bcast = rows(entity_link_pairs(kg_nodes, l3, nodes))
-    bcast_guarded = rows(entity_link_pairs(kg_nodes, l3, nodes,
-                                           l3_hits_cutoff=0))
-    shuffle = rows(entity_link_pairs(kg_nodes, l3, nodes,
-                                     l3_broadcast_cutoff=0))
-    assert bcast == bcast_guarded == shuffle
-    assert want_l3 <= bcast  # the genuine L3 pair is present
-    # decoys excluded on every plan
-    for bad in [("u1", "s1", "g2"), ("u1", "s1", "g3"),
-                ("u1", "s1", "g4"), ("u1", "s1", "s1")]:
-        assert bad not in bcast
+def test_l3_document_pass_matches_cross_document_join(spark):
+    """The same candidate, once inside its target's document (the
+    per-document pass, ``kgbuild.link_pairs``) and once from another
+    document (the Spark join, ``entity_link_pairs``), must give the same
+    pair set on a corpus where every decoy class is present."""
+    _, _, _, cand, doc = _l3_fixture(spark)
+    local = set(link_pairs("u1", doc["kg_nodes"], [cand], doc["paths"]))
+    kg_nodes, l3, nodes, _, _ = _l3_fixture(spark, src_url="u0")
+    cross_rows = entity_link_pairs(kg_nodes, l3, nodes).collect()
+    cross = {(r.a, r.b) for r in cross_rows}
+    assert {(r.url, r.b_url) for r in cross_rows} == {("u0", "u1")}
+    assert local == cross
+    assert ("s1", "g1") in local  # the genuine L3 pair is present
+    for bad in _L3_DECOYS:
+        assert bad not in local
 
 
 def test_l3_empty_candidates_short_circuit(spark):
-    """Zero candidates -> identical output to the shuffle plan (which
-    joins through an empty side) with no corpus-scale join inputs."""
-    from inclusionreferenceskg_spark.operators.kg import entity_link_pairs
-
-    kg_nodes, l3, nodes = _l3_fixture(spark)
+    """Zero candidates -> no L3 pair on either path, and the pairs the
+    blocking linkers give alone (none here: no shared token, paragraph or
+    proper noun) are unaffected."""
+    kg_nodes, l3, nodes, _, doc = _l3_fixture(spark, src_url="u0")
     empty = l3.filter(F.lit(False))
-    fast = {(r.url, r.a, r.b)
-            for r in entity_link_pairs(kg_nodes, empty, nodes).collect()}
-    slow = {(r.url, r.a, r.b)
-            for r in entity_link_pairs(kg_nodes, empty, nodes,
-                                       l3_broadcast_cutoff=0).collect()}
-    assert fast == slow
-    # the fused star (L1 token groups etc.) is unaffected by the
-    # short-circuit; no pair references the L3 target machinery
-    assert all(a != "s1" or b != "g1" for _, a, b in fast)
+    cross = {(r.a, r.b)
+             for r in entity_link_pairs(kg_nodes, empty, nodes).collect()}
+    local = set(link_pairs("u1", doc["kg_nodes"], [], doc["paths"]))
+    assert cross == local == set()
+    assert all(a != "s1" or b != "g1" for a, b in local | cross)

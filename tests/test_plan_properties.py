@@ -150,16 +150,35 @@ def test_iterative_graph_ops_no_window(spark, name):
     assert "Window" not in plan, name
 
 
-def test_apply_merges_singleton_path_is_shuffle_free(spark):
+def test_pipeline_job_count(spark):
+    """run_pipeline over 48 synthetic pages, warm, runs at most 18 Spark
+    jobs: the nodes and qualifiers materializations, the extract
+    materialization with resolve upstream of it (13), the cross-document
+    L3 probe and the triples fetch.  Each extra job is a fixed latency
+    that, at benchmark sizes, costs more than the rows it moves."""
+    from inclusionreferenceskg_spark import synth
+    from inclusionreferenceskg_spark.plans.pipeline import run_pipeline
+
+    pages = synth.synthesize_pages(spark, 48, seed=7)
+    tracker = spark.sparkContext.statusTracker()
+    for _ in range(2):  # the first pass warms the Python workers
+        before = len(tracker.getJobIdsForGroup(None))
+        assert len(run_pipeline(pages).triples.toPandas()) > 0
+        added = len(tracker.getJobIdsForGroup(None)) - before
+    assert added <= 18, added
+
+
+def test_apply_merges_singleton_path_is_shuffle_free(spark, cross_doc_pages):
     """The last-write-wins edge dedup must keep the fat (map-typed attrs)
-    rows off the exchange for singleton keys: the split plan carries the
-    singleton majority through a broadcast LEFT ANTI probe against the
-    skinny duplicate-key census, and exactly ONE Window (over the
-    duplicate minority) survives; the cutoff fallback is the full-table
-    window.  A regression that windows the whole table re-shuffles every
-    fat row at web scale."""
+    rows off the exchange for the documents no cross-document merge
+    touches: the graph tail carries them through a broadcast LEFT ANTI
+    probe against the touched urls, and exactly ONE Window (over the
+    touched documents' edges) survives; apply_merges alone is that one
+    window.  A regression that windows every document's edges
+    re-shuffles every fat row at web scale."""
     from pyspark.sql import functions as F
     from inclusionreferenceskg_spark.operators.kg import apply_merges
+    from inclusionreferenceskg_spark.plans.pipeline import run_pipeline
 
     edges = spark.createDataFrame(
         [("u://x", "a", "b", "l", None, 0),
@@ -183,11 +202,11 @@ def test_apply_merges_singleton_path_is_shuffle_free(spark):
         # \b excludes WindowGroupLimit (the rank-limit pushdown helper)
         return len(re.findall(r"\(\d+\) Window\b", plan))
 
-    split = fmt(apply_merges(None, edges, canon))
+    split = fmt(run_pipeline(cross_doc_pages()).kg_edges)
     assert n_windows(split) == 1, split
     assert "LeftAnti" in split, split
 
-    full = fmt(apply_merges(None, edges, canon, dup_broadcast_cutoff=0))
+    full = fmt(apply_merges(None, edges, canon))
     assert n_windows(full) == 1, full
     assert "LeftAnti" not in full, full
 
